@@ -93,16 +93,24 @@ class per_table_log:
     """Context manager bracketing one table's pipeline with its own log
     file, mirroring the reference's per-table logger lifetime."""
 
-    def __init__(self, base_dir: str | Path | None, table_name: str):
+    def __init__(
+        self,
+        base_dir: str | Path | None,
+        table_name: str,
+        now: datetime | None = None,
+    ):
         self.base_dir = base_dir
         self.table_name = table_name
+        self.now = now
         self._handler: logging.Handler | None = None
         self._token: contextvars.Token | None = None
 
     def __enter__(self):
         self._token = _CURRENT_TABLE.set(self.table_name)
         if self.base_dir is not None:
-            self._handler = table_log_handler(self.base_dir, self.table_name)
+            self._handler = table_log_handler(
+                self.base_dir, self.table_name, self.now
+            )
         return self
 
     def __exit__(self, *exc):

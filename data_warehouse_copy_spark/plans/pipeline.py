@@ -154,7 +154,7 @@ def _run_inner(
         result.outcomes.append(TableOutcome(spec.table_name, "Sproc", "Completed"))
 
     def do_copy(spec: TableSpec, use_truncate: bool) -> TableOutcome:
-        with per_table_log(config.log_dir, spec.table_name):
+        with per_table_log(config.log_dir, spec.table_name, now):
             log.info("Processing table: %s", spec.table_name)
             return _copy_inner(spec, use_truncate)
 
@@ -197,7 +197,7 @@ def _run_inner(
             return TableOutcome(spec.table_name, "Copy", "Failed", 0, str(exc))
 
     def do_update(spec: TableSpec) -> TableOutcome:
-        with per_table_log(config.log_dir, spec.table_name):
+        with per_table_log(config.log_dir, spec.table_name, now):
             log.info("Updating table: %s", spec.table_name)
             return _update_inner(spec)
 

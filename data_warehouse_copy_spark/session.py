@@ -20,6 +20,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    from data_warehouse_copy_spark.sources.managed_table import (
+        _DISTRIBUTED_PLAN_MIN_FILES,
+    )
+
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     # Local mode: shuffle width ~= cores. On a real cluster this would be
@@ -36,6 +40,15 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # ManagedTable reads hand Spark the manifest's explicit file list.
+        # Past 32 paths (Spark's default) Spark would list those files
+        # again in a distributed job, one task per path, before every
+        # scan. Below ManagedTable's own planning gate the driver lists
+        # them; past it, reads already take the distributed plan.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(_DISTRIBUTED_PLAN_MIN_FILES),
+        )
         # INT64 micros instead of legacy INT96: interoperable, and parquet
         # keeps min/max footer stats for it — ManagedTable's file-level
         # data skipping on timestamp columns depends on those stats.

@@ -2105,13 +2105,11 @@ class ManagedTable:
         if columns is not None:
             schema = _narrow_struct(schema, columns, where)
         if not files:
-            # one (empty) partition, not the 32-way default parallelism:
-            # a pruned-to-zero read costs zero tasks' worth of work, and a
-            # plan unioning many point probes must not pay 32 empty tasks
-            # per probe (24 bloom probes did: a 768-task no-op stage)
-            empty = self.spark.createDataFrame(
-                [], schema or T.StructType([])
-            ).coalesce(1)
+            # no partition at all, not the 32-way default parallelism: a
+            # pruned-to-zero read costs no task, and a plan unioning many
+            # point probes must not pay 32 empty tasks per probe (24 bloom
+            # probes did: a 768-task no-op stage)
+            empty = _empty_frame(self.spark, schema or T.StructType([]))
             return empty.select(*columns) if columns is not None else empty
         # Read under the MANIFEST schema, not the first file's: after an
         # additive schema evolution (append(merge_schema=True)) old files
@@ -2539,8 +2537,8 @@ class ManagedTable:
             else T.StructType([])
         )
         if not added:
-            # single empty partition (same rationale as read()'s empty path)
-            return self.spark.createDataFrame([], schema).coalesce(1)
+            # same rationale as read()'s empty path
+            return _empty_frame(self.spark, schema)
         # files carry physical names (stable across renames); the cursor
         # consumer sees to_version's logical shape
         pmap = _phys_map(end.columns)
@@ -2742,7 +2740,7 @@ class ManagedTable:
                 )
                 frames.append(tag(logical(gone), pre_t, v))
         if not frames:
-            return self.spark.createDataFrame([], out_schema).coalesce(1)
+            return _empty_frame(self.spark, out_schema)
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
@@ -3720,7 +3718,7 @@ class ManagedTable:
             st = T.StructType.fromJson(
                 json.loads(self.snapshot().schema_json or "{}")
             )
-            self.spark.createDataFrame([], st).select(F.expr(expr))
+            _empty_frame(self.spark, st).select(F.expr(expr))
         self._set_field_metadata(name, "default_expression", expr)
 
     def column_defaults(self) -> dict:
@@ -4554,12 +4552,15 @@ class ManagedTable:
                 from data_warehouse_copy_spark.window import day_bounds
 
                 _, end_bound = day_bounds(date_from, date_to)
-                last_day = self.read(partitions={date_to})
-                if date_column in last_day.columns:
-                    tail = last_day.filter(F.col(date_column) > F.lit(end_bound))
-                    tail_rows = tail.count()
-                else:  # partition absent (e.g. first load) -> no tail
-                    tail_rows = 0
+                # no live file in the last day (a new window, or the first
+                # load): no tail, and no Spark action to prove it
+                if any(f.partition == date_to for f in m.files):
+                    last_day = self.read(partitions={date_to})
+                    if date_column in last_day.columns:
+                        tail = last_day.filter(
+                            F.col(date_column) > F.lit(end_bound)
+                        )
+                        tail_rows = tail.count()
                 write_df = df.unionByName(tail) if tail_rows else df
             else:
                 write_df = df
@@ -6019,7 +6020,7 @@ class ManagedTable:
                         "__dwcs_uri", "__dwcs_pos"
                     )
                     if cand
-                    else self.spark.createDataFrame([], schema)
+                    else _empty_frame(self.spark, schema)
                 )
                 kept = tuple(f for f in m.files if f.path not in affected_paths)
             merged = target.join(keys, on=primary_key, how="left_anti").unionByName(
@@ -6411,8 +6412,8 @@ class ManagedTable:
                 columns=None if m is not None else columns,
             )
             if candidates
-            else self.spark.createDataFrame(
-                [],
+            else _empty_frame(
+                self.spark,
                 T.StructType(
                     list(schema.fields)
                     + [
@@ -6464,7 +6465,7 @@ class ManagedTable:
                 # s-side and silently skip the clause — so resolve each
                 # condition against a target-only frame first (analysis
                 # only, no job) to keep the failure loud.
-                bare = self.spark.createDataFrame([], schema).alias("t")
+                bare = _empty_frame(self.spark, schema).alias("t")
                 for cond, _a in by_source_clauses:
                     if cond is None:
                         continue
@@ -6697,9 +6698,14 @@ class ManagedTable:
         )
         if not (all_str or all_int):
             return None
-        # reserved column names: the pk itself may be called path/lo/hi
+        # reserved column names: the pk itself may be called path/lo/hi.
+        # An Arrow table lands in the JVM directly; a Python list would
+        # make the probe's first action start a Python worker.
+        import pyarrow as pa
+
+        path_, lo_, hi_ = zip(*spans)
         span_df = self.spark.createDataFrame(
-            spans, ["__mt_path", "__mt_lo", "__mt_hi"]
+            pa.table({"__mt_path": path_, "__mt_lo": lo_, "__mt_hi": hi_})
         )
         pk = keys[primary_key]
         hit = (
@@ -8592,6 +8598,22 @@ def _validate_merge_assignments(
             raise ValueError(
                 f"merge() must not assign its key columns {overlap}"
             )
+
+
+def _empty_frame(spark: SparkSession, schema: "T.StructType") -> DataFrame:
+    """An empty frame of exactly ``schema`` (nullability included),
+    planned as an empty JVM local relation. ``createDataFrame([], schema)``
+    builds a Python RDD instead, and its first action starts a
+    Python-worker round trip (0.8 s on 4 local cores) to produce no rows;
+    this frame runs no task at all, and Spark's optimizer folds joins and
+    unions over it."""
+    js = spark._jsparkSession
+    return DataFrame(
+        js.createDataFrame(
+            spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json())
+        ),
+        spark,
+    )
 
 
 def _project_rename(df: DataFrame, renames: dict | None) -> DataFrame:

@@ -3171,7 +3171,7 @@ def _apply_table_properties(
 # pinning the rewritten dim to the probe's version (``versionAsOf``); the
 # fact resolves once, in the rewritten query itself.
 
-_DFP_LOG = logging.getLogger("dwcs.dynamic_prune")
+_DFP_LOG = logging.getLogger("data_warehouse_copy_spark.dynamic_prune")
 _DFP_MAX_KEYS = 20_000   # probe cap: largest IN-list pushed into the scan
 _DFP_DIM_MAX = 2_000_000  # never probe a dim the stats call bigger
 _DFP_MIN_RATIO = 4.0     # fact must be provably >= this x dim rows
@@ -4303,6 +4303,8 @@ def _try_dynamic_prune_in_subquery(
     return df
 
 
+_MV_LOG = logging.getLogger("data_warehouse_copy_spark.matview")
+
 #: statements that can advance a registered base table's head — the
 #: only shapes worth paying the autoRefresh head-probe after
 _MUTATING_SQL_RE = re.compile(
@@ -4333,9 +4335,7 @@ def _auto_refresh_matviews(spark, catalog) -> None:
             ):
                 mv.refresh()
         except Exception as exc:  # noqa: BLE001 — best-effort contract
-            logging.getLogger("dwcs.matview").warning(
-                "autoRefresh of %s skipped: %s", name, exc
-            )
+            _MV_LOG.warning("autoRefresh of %s skipped: %s", name, exc)
 
 
 def execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:

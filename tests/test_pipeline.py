@@ -241,6 +241,27 @@ def test_cli_main_exit_codes(spark, sf_dir, tmp_path, capsys):
     assert rc == 0
 
 
+def test_engine_loggers_reach_the_run_log(tmp_path):
+    """Every engine logger sits under the package logger, so the run's
+    main log file captures its records."""
+    from data_warehouse_copy_spark.plans.logfiles import (
+        setup_run_logging,
+        teardown,
+    )
+    from data_warehouse_copy_spark.sources import sql_dml
+
+    handler = setup_run_logging(tmp_path, datetime(2026, 8, 13, 12, 0))
+    try:
+        sql_dml._DFP_LOG.warning("dynamic prune probe record")
+        sql_dml._MV_LOG.warning("matview probe record")
+    finally:
+        teardown(handler)
+    (main_log,) = (tmp_path / "2026-08" / "Main").glob("bulk_copy_log_*.txt")
+    text = main_log.read_text()
+    assert "dynamic prune probe record" in text
+    assert "matview probe record" in text
+
+
 def test_parallel_table_logs_are_isolated(tmp_path):
     """Concurrent per-table handlers share the package logger; the
     contextvar filter must keep each table's file free of the other
@@ -287,17 +308,22 @@ def test_cli_maintenance_commands(spark, tmp_path, capsys):
     t = ManagedTable.create(spark, root)
     for i in range(3):
         t.append(spark.range(i * 10, i * 10 + 10).select(F.col("id").alias("k")))
+    appended = {f.path for f in t.snapshot().files}
 
     assert main(["maintenance", "compact", root], spark=spark) == 0
     out = capsys.readouterr().out
     assert "-> 1 files" in out
     assert len(t.snapshot().files) == 1
+    # each append writes one file per input partition, so the number the
+    # compaction unreferenced depends on the core count
+    unreferenced = appended - {f.path for f in t.snapshot().files}
+    assert len(unreferenced) >= 3
 
     # young orphans survive the default retention; --retention-hours 0 reclaims
     assert main(["maintenance", "vacuum", root], spark=spark) == 0
-    assert "0 files removed" in capsys.readouterr().out
+    assert "vacuum\t0 files removed" in capsys.readouterr().out
     assert main(["maintenance", "vacuum", root, "--retention-hours", "0"], spark=spark) == 0
-    assert "3 files removed" in capsys.readouterr().out
+    assert f"vacuum\t{len(unreferenced)} files removed" in capsys.readouterr().out
     assert t.read().count() == 30
 
     assert main(["maintenance", "history", root], spark=spark) == 0
