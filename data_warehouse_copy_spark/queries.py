@@ -1511,7 +1511,7 @@ WHERE o_orderdate BETWEEN TIMESTAMP '1995-03-01 00:00:00'
 
 def predicate_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level DELETE WHERE under the correctness gate
-    (``ManagedTable.delete``, Delta-semantics, default merge-on-read
+    (``ManagedTable.delete``, Delta-semantics, merge-on-read
     deletion vectors): orders load into a key-clustered table
     (range-partitioned writes give each file a tight, disjoint key span),
     then a predicate delete removes one status's low-value rows. The
@@ -1542,7 +1542,7 @@ WHERE NOT (o_orderstatus = 'F' AND o_totalprice < 50000.0)
 
 def predicate_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level UPDATE SET ... WHERE under the correctness gate
-    (``ManagedTable.update``, Delta-semantics, default merge-on-read:
+    (``ManagedTable.update``, Delta-semantics, merge-on-read:
     matched OLD positions become a deletion vector and only the k
     rewritten rows land as new files, stats-scoped like
     :func:`predicate_delete_roundtrip`): low-priority urgent orders get

@@ -2572,7 +2572,8 @@ class ManagedTable:
           (reconstructed from the DV files the commit already wrote: the
           VERDICT r5 "pure deletes are invisible to cursors" item);
         - ``removed_prior_entries``: files this commit removed without
-          re-adding (overwrite/truncate/CoW rewrites) — their pre-commit
+          re-adding (overwrite/truncate, and the copy-on-write (CoW) DML
+          rewrites older logs still hold) — their pre-commit
           live rows are deletes.
 
         Byte-motion commits (compact, restore/unrestore, recluster) carry
@@ -2641,9 +2642,10 @@ class ManagedTable:
         Semantics by op: ``append``/``clone``/``merge`` adds are
         ``insert``; ``update`` adds are ``update_postimage`` and its DV
         positions ``update_preimage``; every other DV position is
-        ``delete``; files removed outright (overwrite, CoW rewrites)
-        emit their pre-commit live rows as ``delete``. A CoW
-        rewrite / merge therefore renders as delete+insert pairs — the
+        ``delete``; files removed outright (overwrite, and the CoW DML
+        rewrites older logs still hold) emit their pre-commit live rows
+        as ``delete``. A CoW rewrite / merge therefore renders as
+        delete+insert pairs — the
         engine's own convergence contract (delete+reinsert,
         ``TableUpdateService.cs:81-161``) — which re-applies exactly;
         consumers wanting collapsed updates diff on their key.
@@ -2728,8 +2730,8 @@ class ManagedTable:
                 # files removed outright: on an UPDATE commit their
                 # prior-live rows are the update's preimages (a DV update
                 # evicts a file exactly when this commit tombstoned its
-                # every remaining row; a CoW update renders copied
-                # unchanged rows as equal-valued pre+post pairs — self
+                # every remaining row; an older log's CoW update renders
+                # copied unchanged rows as equal-valued pre+post pairs — self
                 # consistent, re-applies exactly); anything else is a
                 # plain delete
                 gone = self._apply_dv(
@@ -4305,8 +4307,7 @@ class ManagedTable:
         return sum(f.rows for f in new_files)
 
     def replace_where(
-        self, df: DataFrame, where: list[tuple], strategy: str = "dv",
-        validate: bool = True,
+        self, df: DataFrame, where: list[tuple], validate: bool = True,
     ) -> tuple[int, int]:
         """Atomic predicate-scoped overwrite — Delta's ``replaceWhere``,
         the general form of :meth:`overwrite_range` (which covers day
@@ -4319,29 +4320,23 @@ class ManagedTable:
         rows_inserted)``.
 
         The delete side stats+bloom-prunes candidates exactly like
-        :meth:`delete`; ``strategy="dv"`` (default) tombstones matched
-        positions merge-on-read — replacing a k-row slice of a huge file
-        costs O(k) positions + the new data, never a rewrite —
-        ``strategy="cow"`` rewrites candidate survivors."""
+        :meth:`delete` and tombstones matched positions merge-on-read —
+        replacing a k-row slice of a huge file costs O(k) positions + the
+        new data, never a rewrite."""
         if not where:
             raise ValueError(
                 "replace_where() requires a predicate; use overwrite() "
                 "to truncate-and-load"
             )
-        if strategy not in ("dv", "cow"):
-            raise ValueError(
-                f"replace_where strategy must be 'dv' or 'cow', got {strategy!r}"
-            )
         pred = _where_predicate(where)
         with _lock_for(self.root):
-            if strategy == "dv":
-                b = self._bounded_ingest_base()
-                if b is not None and b[1] is not None:
-                    out = self._replace_where_bounded(
-                        df, where, pred, b, validate=validate
-                    )
-                    if out is not None:
-                        return out
+            b = self._bounded_ingest_base()
+            if b is not None and b[1] is not None:
+                out = self._replace_where_bounded(
+                    df, where, pred, b, validate=validate
+                )
+                if out is not None:
+                    return out
             m = self.snapshot()
             if m.schema_json:
                 existing = T.StructType.fromJson(json.loads(m.schema_json))
@@ -4391,39 +4386,15 @@ class ManagedTable:
                     read_spans=_where_read_spans(where, m.columns),
                 )
                 return (0, n_ins)
-            if strategy == "dv":
-                hits = self._scan_with_pos(m, candidates).filter(pred)
-                dv_files, per_file = self._write_dv(hits)
-                if dv_files is None:
-                    files, n_del = tuple(m.files), 0
-                else:
-                    files = self._grow_dv(m.files, dv_files, per_file)
-                    n_del = sum(per_file.values())
-                self._commit_files(
-                    m, files + new_files, schema_json, "replace_where",
-                    read_spans=_where_read_spans(where, m.columns),
-                )
-                return (n_del, n_ins)
-            cand_df = self._scan_with_pos(m, candidates)
-            n_del = cand_df.filter(pred).count()
-            if n_del == 0:
-                self._commit_files(
-                    m, tuple(m.files) + new_files, schema_json, "replace_where",
-                    read_spans=_where_read_spans(where, m.columns),
-                )
-                return (0, n_ins)
-            survivors = cand_df.filter(~F.coalesce(pred, F.lit(False))).drop(
-                "__dwcs_uri", "__dwcs_pos"
-            )
-            rewritten = self._write_files(
-                survivors, m.partition_date_col, m.cluster_col,
-                bloom_cols=m.bloom_cols,
-                columns=m.columns,
-            )
-            cand_paths = {c.path for c in candidates}
-            kept = tuple(f for f in m.files if f.path not in cand_paths)
+            hits = self._scan_with_pos(m, candidates).filter(pred)
+            dv_files, per_file = self._write_dv(hits)
+            if dv_files is None:
+                files, n_del = tuple(m.files), 0
+            else:
+                files = self._grow_dv(m.files, dv_files, per_file)
+                n_del = sum(per_file.values())
             self._commit_files(
-                m, kept + rewritten + new_files, schema_json, "replace_where",
+                m, files + new_files, schema_json, "replace_where",
                 read_spans=_where_read_spans(where, m.columns),
             )
             return (n_del, n_ins)
@@ -4655,49 +4626,43 @@ class ManagedTable:
             )
         return deleted, sum(f.rows for f in new_files)
 
-    def delete(self, where: list[tuple], strategy: str = "dv") -> int:
+    def delete(self, where: list[tuple]) -> int:
         """Row-level predicate DELETE as ONE atomic commit (Delta's
         ``DELETE WHERE``). ``where`` is the same conjunctive
         ``(column, op, value)`` list :meth:`read` takes; rows where the
         conjunction is TRUE are deleted (NULL-predicate rows survive —
         SQL semantics). Returns rows deleted.
 
-        Both strategies stats-prune first: files whose manifest min/max
+        Candidates are stats-pruned first: files whose manifest min/max
         prove no row can match are kept UNTOUCHED, and a candidate set
         with no actual matches commits a ``delete_noop`` keeping every
         file byte-identical. Files without usable stats degrade to
         candidates (a wider touch), never to a wrong answer.
 
-        ``strategy="dv"`` (default) is MERGE-ON-READ, the Delta
-        deletion-vector / Iceberg position-delete shape: deleting k rows
-        writes an O(k) position file under ``_dv/`` plus metadata — no
-        data file is rewritten, so a 1-row delete from a 1 GB file costs
-        kilobytes instead of a gigabyte of rewrite amplification (the
-        100 TB DML cost). Readers subtract DV'd positions with one
-        anti-join; :meth:`compact` folds accumulated DVs back into clean
-        files. ``strategy="cow"`` is classic copy-on-write — rewrite the
-        candidate files' survivors — the right call when a delete guts
-        most of its candidate files (read amplification would outlast the
-        rewrite)."""
+        The delete is MERGE-ON-READ, the Delta deletion-vector / Iceberg
+        position-delete shape: deleting k rows writes an O(k) position
+        file under ``_dv/`` plus metadata — no data file is rewritten, so
+        a 1-row delete from a 1 GB file costs kilobytes instead of a
+        gigabyte of rewrite amplification (the 100 TB DML cost). Readers
+        subtract DV'd positions with one anti-join; :meth:`compact` folds
+        accumulated DVs back into clean files (the answer to a delete
+        that guts most of its files)."""
         if not where:
             raise ValueError(
                 "delete() requires at least one predicate; "
                 "use overwrite() to truncate"
             )
-        if strategy not in ("dv", "cow"):
-            raise ValueError(f"delete strategy must be 'dv' or 'cow', got {strategy!r}")
         with _lock_for(self.root):
-            if strategy == "dv":
-                # bounded path first (the write-side driver ceiling): past
-                # the planning gate, candidates come from the distributed
-                # plan and the commit is O(touched) — the full file list
-                # is never materialized
-                head = self._head_version()
-                planned = self._plan_distributed(
-                    head, None, None, None, where, keep_stats=True
-                )
-                if planned is not None:
-                    return self._delete_dv_bounded(head, planned, where)
+            # bounded path first (the write-side driver ceiling): past the
+            # planning gate, candidates come from the distributed plan and
+            # the commit is O(touched) — the full file list is never
+            # materialized
+            head = self._head_version()
+            planned = self._plan_distributed(
+                head, None, None, None, where, keep_stats=True
+            )
+            if planned is not None:
+                return self._delete_dv_bounded(head, planned, where)
             m = self.snapshot()
             wp = _map_where(where, _phys_map(m.columns)) or []
             candidates = [
@@ -4714,9 +4679,7 @@ class ManagedTable:
             if not candidates:
                 self._commit_files(m, tuple(m.files), m.schema_json, "delete_noop")
                 return 0
-            if strategy == "dv":
-                return self._delete_dv(m, candidates, where)
-            return self._delete_cow(m, candidates, where)
+            return self._delete_dv(m, candidates, where)
 
     def _delete_dv_bounded(
         self, base_version: int, planned: tuple, where: list[tuple]
@@ -5050,31 +5013,6 @@ class ManagedTable:
             f"{op} at {self.root}: gave up after {_COMMIT_MAX_ATTEMPTS} "
             f"commit attempts under contention"
         )
-
-    def _delete_cow(self, m: Manifest, candidates: list, where: list[tuple]) -> int:
-        cand_df = self._scan_with_pos(m, candidates)
-        pred = _where_predicate(where)
-        n_match = cand_df.filter(pred).count()
-        if n_match == 0:
-            # stats admitted a match but the rows don't exist — keep
-            # every file byte-identical instead of rewriting them
-            self._commit_files(m, tuple(m.files), m.schema_json, "delete_noop")
-            return 0
-        survivors = cand_df.filter(~F.coalesce(pred, F.lit(False))).drop(
-            "__dwcs_uri", "__dwcs_pos"
-        )
-        new_files = self._write_files(
-            survivors, m.partition_date_col, m.cluster_col,
-            bloom_cols=m.bloom_cols,
-            columns=m.columns,
-        )
-        cand_paths = {c.path for c in candidates}
-        kept = tuple(f for f in m.files if f.path not in cand_paths)
-        self._commit_files(
-            m, kept + new_files, m.schema_json, "delete",
-            read_spans=_where_read_spans(where, m.columns),
-        )
-        return n_match
 
     def _delete_dv(self, m: Manifest, candidates: list, where: list[tuple]) -> int:
         hits = self._scan_with_pos(m, candidates).filter(_where_predicate(where))
@@ -5430,9 +5368,7 @@ class ManagedTable:
             )
         return out
 
-    def update(
-        self, where: list[tuple], set_exprs: dict, strategy: str = "dv"
-    ) -> int:
+    def update(self, where: list[tuple], set_exprs: dict) -> int:
         """See :meth:`_update_impl` — this wrapper adds the identity
         contract (round-13): assigning a GENERATED ALWAYS AS IDENTITY
         column is rejected (Delta semantics — the engine owns those
@@ -5447,36 +5383,31 @@ class ManagedTable:
                 f"column(s) {always} are GENERATED ALWAYS AS IDENTITY "
                 f"— UPDATE cannot assign them"
             )
-        n = self._update_impl(where, set_exprs, strategy)
+        n = self._update_impl(where, set_exprs)
         if n and touched:
             self.sync_identity()
         return n
 
-    def _update_impl(
-        self, where: list[tuple], set_exprs: dict, strategy: str = "dv"
-    ) -> int:
+    def _update_impl(self, where: list[tuple], set_exprs: dict) -> int:
         """Row-level predicate UPDATE as ONE atomic commit (Delta's
         ``UPDATE SET ... WHERE``): rows where the ``where`` conjunction is
         TRUE get each ``set_exprs`` column replaced (value may be a
         Column expression or a SQL string); NULL-predicate rows are
         untouched. Returns rows updated.
 
-        Both strategies stats-prune candidates and noop when no row
-        actually matches. ``strategy="dv"`` (default, merge-on-read):
-        matched OLD positions go into a deletion vector and only the k
-        REWRITTEN rows are written as new files — updating k rows costs
-        O(k) regardless of how big the candidate files are.
-        ``strategy="cow"`` rewrites the candidate files whole.
-        Assignments must target existing columns — UPDATE never evolves
-        the schema (that is ``append(merge_schema=True)``'s job) — and
-        values are cast to the column's current type so a same-named type
-        drift cannot poison the table."""
+        Candidates are stats-pruned and the update noops when no row
+        actually matches. Merge-on-read: matched OLD positions go into a
+        deletion vector and only the k REWRITTEN rows are written as new
+        files — updating k rows costs O(k) regardless of how big the
+        candidate files are. Assignments must target existing columns —
+        UPDATE never evolves the schema (that is
+        ``append(merge_schema=True)``'s job) — and values are cast to the
+        column's current type so a same-named type drift cannot poison
+        the table."""
         if not where:
             raise ValueError("update() requires at least one predicate")
         if not set_exprs:
             raise ValueError("update() requires at least one assignment")
-        if strategy not in ("dv", "cow"):
-            raise ValueError(f"update strategy must be 'dv' or 'cow', got {strategy!r}")
         set_exprs = self._augment_generated_updates(set_exprs)
         # plain Python scalars are literals (Delta's updateExpr contract:
         # strings are SQL expressions, Columns pass through, anything
@@ -5486,45 +5417,44 @@ class ManagedTable:
             for c, v in set_exprs.items()
         }
         with _lock_for(self.root):
-            if strategy == "dv":
-                # bounded path: same write-side ceiling break as delete()
-                head = self._head_version()
-                planned = self._plan_distributed(
-                    head, None, None, None, where, keep_stats=True
+            # bounded path: same write-side ceiling break as delete()
+            head = self._head_version()
+            planned = self._plan_distributed(
+                head, None, None, None, where, keep_stats=True
+            )
+            if planned is not None:
+                sel, schema_json, plan_columns = planned
+                schema = (
+                    T.StructType.fromJson(json.loads(schema_json))
+                    if schema_json
+                    else T.StructType([])
                 )
-                if planned is not None:
-                    sel, schema_json, plan_columns = planned
-                    schema = (
-                        T.StructType.fromJson(json.loads(schema_json))
-                        if schema_json
-                        else T.StructType([])
+                known = {f.name: f.dataType for f in schema.fields}
+                bad = sorted(set(set_exprs) - set(known))
+                if bad:
+                    raise ValueError(
+                        f"update() assigns unknown columns {bad}; UPDATE "
+                        f"never adds columns (use "
+                        f"append(merge_schema=True))"
                     )
-                    known = {f.name: f.dataType for f in schema.fields}
-                    bad = sorted(set(set_exprs) - set(known))
-                    if bad:
-                        raise ValueError(
-                            f"update() assigns unknown columns {bad}; UPDATE "
-                            f"never adds columns (use "
-                            f"append(merge_schema=True))"
-                        )
-                    if not sel:
-                        self._commit_bounded(head, (), set(), "update_noop")
-                        return 0
-                    _ck, header, actions = self._plan_base(head)
-                    cluster_col = header.get("cluster_col")
-                    constraints = header.get("constraints")
-                    for raw in actions:
-                        if "cluster_col_change" in raw:
-                            cluster_col = raw["cluster_col_change"][0]
-                        if raw.get("constraints") is not None:
-                            constraints = raw["constraints"] or None
-                    return self._update_dv_core(
-                        None, head, sel, where, set_exprs, schema, known,
-                        header.get("partition_date_col"), cluster_col,
-                        header.get("bloom_cols"), schema_json=schema_json,
-                        columns=plan_columns,
-                        constraints=constraints,
-                    )
+                if not sel:
+                    self._commit_bounded(head, (), set(), "update_noop")
+                    return 0
+                _ck, header, actions = self._plan_base(head)
+                cluster_col = header.get("cluster_col")
+                constraints = header.get("constraints")
+                for raw in actions:
+                    if "cluster_col_change" in raw:
+                        cluster_col = raw["cluster_col_change"][0]
+                    if raw.get("constraints") is not None:
+                        constraints = raw["constraints"] or None
+                return self._update_dv_core(
+                    None, head, sel, where, set_exprs, schema, known,
+                    header.get("partition_date_col"), cluster_col,
+                    header.get("bloom_cols"), schema_json=schema_json,
+                    columns=plan_columns,
+                    constraints=constraints,
+                )
             m = self.snapshot()
             schema = (
                 T.StructType.fromJson(json.loads(m.schema_json))
@@ -5551,55 +5481,10 @@ class ManagedTable:
             if not candidates:
                 self._commit_files(m, tuple(m.files), m.schema_json, "update_noop")
                 return 0
-            if strategy == "dv":
-                return self._update_dv(m, candidates, where, set_exprs, schema, known)
-            return self._update_cow(m, candidates, where, set_exprs, schema, known)
-
-    def _update_cow(
-        self, m, candidates, where, set_exprs, schema, known
-    ) -> int:
-        cand_df = self._scan_with_pos(m, candidates).drop(
-            "__dwcs_uri", "__dwcs_pos"
-        )
-        pred = _where_predicate(where)
-        n_match = cand_df.filter(pred).count()
-        if n_match == 0:
-            self._commit_files(m, tuple(m.files), m.schema_json, "update_noop")
-            return 0
-        hit = F.coalesce(pred, F.lit(False))
-        # ONE select so every assignment's right-hand side reads the
-        # ORIGINAL row (SQL UPDATE semantics) — sequential withColumn
-        # would let {a: b+1, b: a+1} read each other's new values.
-        assigned = {
-            c: F.when(
-                hit, (F.expr(v) if isinstance(v, str) else v).cast(known[c])
-            ).otherwise(F.col(c)).alias(c)
-            for c, v in set_exprs.items()
-        }
-        rewritten = cand_df.select(
-            *[assigned.get(f.name, F.col(f.name)) for f in schema.fields]
-        )
-        rewritten = self._enforce_constraints(rewritten, m.constraints, "update")
-        new_files = self._write_files(
-            rewritten, m.partition_date_col, m.cluster_col,
-            bloom_cols=m.bloom_cols,
-            columns=m.columns,
-        )
-        cand_paths = {c.path for c in candidates}
-        kept = tuple(f for f in m.files if f.path not in cand_paths)
-        self._commit_files(
-            m, kept + new_files, m.schema_json, "update",
-            read_spans=_where_read_spans(where, m.columns),
-        )
-        return n_match
-
-    def _update_dv(
-        self, m, candidates, where, set_exprs, schema, known
-    ) -> int:
-        return self._update_dv_core(
-            m, None, candidates, where, set_exprs, schema, known,
-            m.partition_date_col, m.cluster_col, m.bloom_cols,
-        )
+            return self._update_dv_core(
+                m, None, candidates, where, set_exprs, schema, known,
+                m.partition_date_col, m.cluster_col, m.bloom_cols,
+            )
 
     def _update_dv_core(
         self,
@@ -5670,62 +5555,33 @@ class ManagedTable:
                     read_spans=_where_read_spans(where, m.columns),
                 )
             else:
-                by_path = {f.path: f for f in candidates}
-                stray = sorted(set(per_file) - set(by_path))
-                if stray:
-                    raise RuntimeError(
-                        f"deletion-vector accounting references {len(stray)} "
-                        f"path(s) outside the planned candidates (first: "
-                        f"{stray[0]!r}); refusing to commit"
-                    )
-                changed = []
-                removed: set[str] = set()
-                for rel, n in per_file.items():
-                    f = by_path[rel]
-                    nf = _dc_replace(
-                        f,
-                        dv_paths=f.dv_paths + dv_files,
-                        dv_rows=f.dv_rows + n,
-                    )
-                    removed.add(rel)
-                    if nf.dv_rows < nf.rows:
-                        changed.append(nf)
+                changed, removed = self._regrow_planned(
+                    candidates, dv_files, per_file
+                )
                 self._commit_bounded(
-                    base_version, tuple(changed) + new_files, removed, "update",
+                    base_version, changed + new_files, removed, "update",
                     read_spans=_where_read_spans(where, columns),
                 )
             return sum(per_file.values())
         finally:
             shutil.rmtree(stage, ignore_errors=True)
 
-    def merge_by_key(
-        self, source_df: DataFrame, primary_key: str, strategy: str = "dv"
-    ) -> int:
+    def merge_by_key(self, source_df: DataFrame, primary_key: str) -> int:
         """Delete+reinsert by key as ONE atomic commit — the reference's
         upsert (O9 batched ``IN``-list delete + O10 re-select/insert,
         ``TableUpdateService.cs:108-161``) expressed as a join.
 
-        ``strategy="dv"`` (default, merge-on-read like :meth:`delete`):
-        target rows carrying a source key are tombstoned via a deletion
-        vector — positions found by a semi-join over the stats-scoped
-        candidate files — and the source rows append as new files. A
-        merge touches O(matched rows + source rows), never a partition
-        rewrite; :meth:`compact` folds the DVs. ``strategy="cow"`` keeps
-        the classic rewrite:
-
-        1. affected partitions/files = those holding any source key (via
-           semi-join / pk-span stats);
-        2. replacement data = target rows with the key removed
-           (``left_anti``) union the source rows;
-        3. only those partitions' files are rewritten.
+        Merge-on-read like :meth:`delete`: target rows carrying a source
+        key are tombstoned via a deletion vector — positions found by a
+        semi-join over the stats-scoped candidate files — and the source
+        rows append as new files. A merge touches O(matched rows + source
+        rows), never a partition rewrite; :meth:`compact` folds the DVs.
 
         No key set ever reaches the driver (reference O8 ``collect`` is
         deliberately NOT ported, SURVEY.md §7 risk 6). Returns the number of
         distinct keys merged — matching the reference's metric, which reports
         the *key* count, not the row count (``TableUpdateService.cs:163``).
         """
-        if strategy not in ("dv", "cow"):
-            raise ValueError(f"merge strategy must be 'dv' or 'cow', got {strategy!r}")
         # identity contract (round-13): merge_by_key re-inserts PROVIDED
         # rows and never allocates — ALWAYS identity tables reject
         # (their ids are engine-owned), BY DEFAULT sources must carry
@@ -5751,19 +5607,27 @@ class ManagedTable:
                     f"DEFAULT AS IDENTITY column(s) {missing}"
                 )
         with _lock_for(self.root):
-            if strategy == "dv":
+            # The distinct-key frame feeds THREE separate actions (count,
+            # span probe, position semi-join), in whichever path runs —
+            # and in both when the bounded path declines. Unpersisted, each
+            # re-scans the source and re-runs the distinct shuffle — at
+            # scale that is 3x the source I/O for one merge. Persisting it
+            # is safe where the round-14 in-merge source persist was not:
+            # keys is already pruned to the single key column (nothing for
+            # pruning to lose) and its cached runtime size keeps the
+            # semi-join's broadcast decision accurate.
+            keys = source_df.select(primary_key).distinct().persist()
+            try:
+                n_keys = keys.count()
                 b = self._bounded_ingest_base()
-                if b is not None and b[1] is not None:
-                    out = self._merge_dv_bounded(source_df, primary_key, b)
-                    if out is not None:
-                        out_n = out
-                        self._sync_identity_past_source(specs, source_df)
-                        return out_n
-                n = self._merge_dv(source_df, primary_key)
-            else:
-                n = self._merge_by_key(source_df, primary_key)
+                if b is None or b[1] is None or not self._merge_dv_bounded(
+                    source_df, keys, n_keys, primary_key, b
+                ):
+                    self._merge_dv(source_df, keys, n_keys, primary_key)
+            finally:
+                keys.unpersist()
         self._sync_identity_past_source(specs, source_df)
-        return n
+        return n_keys
 
     def _sync_identity_past_source(self, specs: dict, source_df) -> None:
         """Post-merge watermark sync for BY DEFAULT identity columns the
@@ -5861,208 +5725,104 @@ class ManagedTable:
         ]
 
     def _merge_dv_bounded(
-        self, source_df: DataFrame, primary_key: str, b
-    ) -> "int | None":
-        """Bounded DV merge: the pk-span candidate probe runs over
-        :meth:`manifest_df` (checkpoint-backed — the span frame never
-        exists driver-side in Python) and the commit is an O(touched)
-        action diff. ``None`` → classic fallback: non-integer/string pk
-        (float spans exclude NaN — the same soundness rule
+        self, source_df: DataFrame, keys: DataFrame, n_keys: int,
+        primary_key: str, b,
+    ) -> bool:
+        """Bounded DV merge of the persisted distinct ``keys``: the
+        pk-span candidate probe runs over :meth:`manifest_df`
+        (checkpoint-backed — the span frame never exists driver-side in
+        Python) and the commit is an O(touched) action diff. ``False`` →
+        nothing committed, classic fallback: non-integer/string pk (float
+        spans exclude NaN — the same soundness rule
         :meth:`_affected_files_by_stats` enforces), a file without exact
         pk stats (candidates would be "every file" and the classic scan
         owns that shape), or a pk name JSON-path extraction can't
         address."""
         head, schema_json, _txns, part_col, cluster_col, bloom_cols, columns, constraints = b
         schema = T.StructType.fromJson(json.loads(schema_json))
-        # persisted for the same 3-action reuse as _merge_dv (count, span
-        # probe, position semi-join) — see the rationale there
-        keys = source_df.select(primary_key).distinct().persist()
-        try:
-            n_keys = keys.count()
-            if n_keys == 0:
-                self._commit_bounded(head, (), set(), "merge_noop")
-                return 0
-            sel = self._bounded_span_candidates(
-                head, keys, primary_key, schema, columns
-            )
-            if sel is None:
-                return None
-            changed: tuple = ()
-            removed: set = set()
-            if sel:
-                hits = self._scan_with_pos(
-                    None, sel, schema_json=schema_json, columns=columns
-                ).join(keys, on=primary_key, how="left_semi")
-                dv_files, per_file = self._write_dv(hits)
-                if dv_files is not None:
-                    changed, removed = self._regrow_planned(
-                        sel, dv_files, per_file
-                    )
-            cols = [f.name for f in schema.fields]
-            checked = self._enforce_constraints(
-                source_df.select(*cols), constraints, "merge"
-            )
-            new_files = self._write_files(
-                checked, part_col, cluster_col,
-                bloom_cols=bloom_cols,
-                columns=columns,
-            )
-            self._commit_bounded(head, changed + new_files, removed, "merge")
-            return n_keys
-        finally:
-            keys.unpersist()
+        if n_keys == 0:
+            self._commit_bounded(head, (), set(), "merge_noop")
+            return True
+        sel = self._bounded_span_candidates(
+            head, keys, primary_key, schema, columns
+        )
+        if sel is None:
+            return False
+        changed: tuple = ()
+        removed: set = set()
+        if sel:
+            hits = self._scan_with_pos(
+                None, sel, schema_json=schema_json, columns=columns
+            ).join(keys, on=primary_key, how="left_semi")
+            dv_files, per_file = self._write_dv(hits)
+            if dv_files is not None:
+                changed, removed = self._regrow_planned(
+                    sel, dv_files, per_file
+                )
+        cols = [f.name for f in schema.fields]
+        checked = self._enforce_constraints(
+            source_df.select(*cols), constraints, "merge"
+        )
+        new_files = self._write_files(
+            checked, part_col, cluster_col,
+            bloom_cols=bloom_cols,
+            columns=columns,
+        )
+        self._commit_bounded(head, changed + new_files, removed, "merge")
+        return True
 
-    def _merge_dv(self, source_df: DataFrame, primary_key: str) -> int:
+    def _merge_dv(
+        self, source_df: DataFrame, keys: DataFrame, n_keys: int,
+        primary_key: str,
+    ) -> None:
+        """Classic (full-manifest) DV merge of the persisted distinct
+        ``keys``."""
         m = self.snapshot()
-        # The distinct-key frame feeds THREE separate actions (count,
-        # span probe, position semi-join); unpersisted, each re-scans the
-        # source and re-runs the distinct shuffle — at scale that is 3x
-        # the source I/O for one merge. Persisting it is safe where the
-        # round-14 in-merge source persist was not: keys is already
-        # pruned to the single key column (nothing for pruning to lose)
-        # and its cached runtime size keeps the semi-join's broadcast
-        # decision accurate.
-        keys = source_df.select(primary_key).distinct().persist()
-        try:
-            n_keys = keys.count()
-            if n_keys == 0:
-                # Empty key set still commits + completes (TableUpdateService.cs:167-172)
-                self._commit_files(m, tuple(m.files), m.schema_json, "merge_noop")
-                return 0
-            # Candidate files by pk span (works partitioned or not — footer
-            # stats cover every column); unusable stats degrade to scanning
-            # every file for POSITIONS, never to a wrong answer, and still
-            # rewrite nothing.
-            affected = self._affected_files_by_stats(m, keys, primary_key)
-            candidates = (
-                list(m.files)
-                if affected is None
-                else [f for f in m.files if f.path in affected]
-            )
-            files = tuple(m.files)
-            if candidates:
-                hits = self._scan_with_pos(m, candidates).join(
-                    keys, on=primary_key, how="left_semi"
-                )
-                dv_files, per_file = self._write_dv(hits)
-                if dv_files is not None:
-                    files = self._grow_dv(m.files, dv_files, per_file)
-            if m.schema_json:
-                cols = [
-                    f.name
-                    for f in T.StructType.fromJson(json.loads(m.schema_json)).fields
-                ]
-                checked = self._enforce_constraints(
-                    source_df.select(*cols), m.constraints, "merge"
-                )
-                new_files = self._write_files(
-                    checked, m.partition_date_col, m.cluster_col,
-                    bloom_cols=m.bloom_cols,
-                    columns=m.columns,
-                )
-                self._commit_files(m, files + new_files, m.schema_json, "merge")
-            else:  # first data into a fresh table: adopt the source schema
-                new_files = self._write_files(
-                    source_df, m.partition_date_col, m.cluster_col,
-                    bloom_cols=m.bloom_cols,
-                    columns=m.columns,
-                )
-                self._commit_files(
-                    m, files + new_files, source_df.schema.json(), "merge"
-                )
-            return n_keys
-        finally:
-            keys.unpersist()
-
-    def _merge_by_key(self, source_df: DataFrame, primary_key: str) -> int:
-        m = self.snapshot()
-        source_df = self._enforce_constraints(source_df, m.constraints, "merge")
-        # persisted for the same multi-action reuse as _merge_dv (count,
-        # candidate probe, rewrite anti-join) — see the rationale there
-        keys = source_df.select(primary_key).distinct().persist()
-        try:
-            return self._merge_by_key_planned(m, source_df, keys, primary_key)
-        finally:
-            keys.unpersist()
-
-    def _merge_by_key_planned(
-        self, m, source_df: DataFrame, keys: DataFrame, primary_key: str
-    ) -> int:
-        n_keys = keys.count()
         if n_keys == 0:
             # Empty key set still commits + completes (TableUpdateService.cs:167-172)
             self._commit_files(m, tuple(m.files), m.schema_json, "merge_noop")
-            return 0
-
-        if m.partition_date_col is None:
-            # Stats-scoped rewrite (Delta-style merge pruning): a file can
-            # hold an affected key only if its primary-key span admits one.
-            # On a cluster_col=pk table the affected set is a handful of
-            # files; unclustered spans overlap everything and this gracefully
-            # degrades to the full rewrite.
-            affected_paths = self._affected_files_by_stats(m, keys, primary_key)
-            if affected_paths is None:  # stats unusable -> full rewrite
-                target = self.read()
-                kept: tuple[FileEntry, ...] = ()
-            else:
-                schema = (
-                    T.StructType.fromJson(json.loads(m.schema_json))
-                    if m.schema_json
-                    else T.StructType([])
-                )
-                cand = [f for f in m.files if f.path in affected_paths]
-                # _scan_with_pos: schema-explicit (pre-evolution files
-                # null-backfill) AND prior deletion vectors subtracted — a
-                # raw candidate read would resurrect DV'd rows into the
-                # rewrite
-                target = (
-                    self._scan_with_pos(m, cand).drop(
-                        "__dwcs_uri", "__dwcs_pos"
-                    )
-                    if cand
-                    else _empty_frame(self.spark, schema)
-                )
-                kept = tuple(f for f in m.files if f.path not in affected_paths)
-            merged = target.join(keys, on=primary_key, how="left_anti").unionByName(
-                source_df.select(*target.columns) if target.columns else source_df
-            )
-            new_files = self._write_files(merged, None, m.cluster_col, bloom_cols=m.bloom_cols, columns=m.columns)
-            self._commit_files(m, kept + new_files, merged.schema.json(), "merge")
-            return n_keys
-
-        part_col = m.partition_date_col
-        target = self.read()
-        # Partitions containing affected keys — a column-pruned scan of
-        # (pk, date) only; result is a small day-string list (metadata scale).
-        # No broadcast hint: Catalyst/AQE broadcasts the key side automatically
-        # when it is under the threshold; at 100 TB the key set may be large
-        # and a forced broadcast would OOM the executors.
-        tgt_parts = (
-            target.join(keys, on=primary_key, how="left_semi")
-            .select(F.date_format(F.col(part_col), "yyyy-MM-dd").alias("p"))
-            .distinct()
+            return
+        # Candidate files by pk span (works partitioned or not — footer
+        # stats cover every column); unusable stats degrade to scanning
+        # every file for POSITIONS, never to a wrong answer, and still
+        # rewrite nothing.
+        affected = self._affected_files_by_stats(m, keys, primary_key)
+        candidates = (
+            list(m.files)
+            if affected is None
+            else [f for f in m.files if f.path in affected]
         )
-        src_parts = source_df.select(
-            F.date_format(F.col(part_col), "yyyy-MM-dd").alias("p")
-        ).distinct()
-        affected = {r["p"] for r in tgt_parts.union(src_parts).distinct().collect()}
-        # Null-day rows can hold affected keys but live in the null partition;
-        # the reference's key-delete reaches them too (DELETE ... WHERE pk IN).
-        if any(f.partition is None for f in m.files):
-            affected.add(None)
-        if not affected:
-            self._commit_files(m, tuple(m.files), m.schema_json, "merge_noop")
-            return n_keys
-
-        target_affected = self.read(partitions=affected)
-        cols = target_affected.columns or source_df.columns
-        merged = target_affected.join(
-            keys, on=primary_key, how="left_anti"
-        ).unionByName(source_df.select(*cols))
-        new_files = self._write_files(merged, part_col, m.cluster_col, bloom_cols=m.bloom_cols, columns=m.columns)
-        kept = tuple(f for f in m.files if f.partition not in affected)
-        self._commit_files(m, kept + new_files, merged.schema.json(), "merge")
-        return n_keys
+        files = tuple(m.files)
+        if candidates:
+            hits = self._scan_with_pos(m, candidates).join(
+                keys, on=primary_key, how="left_semi"
+            )
+            dv_files, per_file = self._write_dv(hits)
+            if dv_files is not None:
+                files = self._grow_dv(m.files, dv_files, per_file)
+        if m.schema_json:
+            cols = [
+                f.name
+                for f in T.StructType.fromJson(json.loads(m.schema_json)).fields
+            ]
+            checked = self._enforce_constraints(
+                source_df.select(*cols), m.constraints, "merge"
+            )
+            new_files = self._write_files(
+                checked, m.partition_date_col, m.cluster_col,
+                bloom_cols=m.bloom_cols,
+                columns=m.columns,
+            )
+            self._commit_files(m, files + new_files, m.schema_json, "merge")
+        else:  # first data into a fresh table: adopt the source schema
+            new_files = self._write_files(
+                source_df, m.partition_date_col, m.cluster_col,
+                bloom_cols=m.bloom_cols,
+                columns=m.columns,
+            )
+            self._commit_files(
+                m, files + new_files, source_df.schema.json(), "merge"
+            )
 
     def merge(
         self,
@@ -6261,7 +6021,7 @@ class ManagedTable:
                     merge_spans = {}  # by-source reads everything (eager)
                 else:
                     # persisted: the key frame feeds the candidate probe AND
-                    # the commit's read-span aggregate — see _merge_dv
+                    # the commit's read-span aggregate — see merge_by_key
                     keys = source_df.select(*key_cols).distinct().persist()
                     affected = self._affected_files_by_stats(m, keys, key_cols[0])
                     candidates = (
@@ -6343,7 +6103,7 @@ class ManagedTable:
             _identity_specs(schema_json), insert_clauses, matched_clauses
         )
         # persisted: feeds the span probe AND the commit's read-span
-        # aggregate — see _merge_dv for the persist rationale
+        # aggregate — see merge_by_key for the persist rationale
         keys = source_df.select(*key_cols).distinct().persist()
         try:
             # the span probe prunes on the FIRST key column (sound: a file
@@ -8141,7 +7901,7 @@ class ManagedTable:
                 removed += 1
         dv_dir = self.root / "_dv"
         if dv_dir.exists():
-            # DV parquets folded away by compact (or orphaned by CoW
+            # DV parquets folded away by compact (or orphaned by whole-file
             # rewrites) age out under the same retention contract
             for p in dv_dir.rglob("*.parquet"):
                 if str(p) not in live_dv and p.stat().st_mtime <= cutoff:

@@ -19,6 +19,7 @@ from bench import (  # noqa: E402
     floor_check_line,
     merge_floors,
     next_round,
+    stdout_records,
 )
 
 
@@ -187,3 +188,32 @@ def test_floor_file_covers_registry_or_reports_unfloored():
     assert all(
         isinstance(v, (int, float)) and v > 0 for v in floors.values()
     )
+
+
+def test_stdout_records_print_compact_headline_last():
+    """A last-line parse of bench.py's stdout must read the compact
+    headline: the full per-query record first, ``floor_check`` next,
+    and the headline LAST (PERF_r15 came back all-null while
+    ``floor_check`` printed after it)."""
+    times = {"a": 1.0, "b": 2.5}
+    floor = floor_check_line({"a": 1.0}, {}, {}, ["b"], {})
+    recs = stdout_records(times, 0.1, floor)
+    assert [r["metric"] for r in recs] == [
+        "headline_queries_total", "floor_check", "headline_queries_total",
+    ]
+    assert recs[0]["queries"] == times and recs[0]["value"] == 3.5
+    assert recs[1] is floor
+    assert recs[-1] == {
+        "metric": "headline_queries_total",
+        "value": 3.5,
+        "unit": "sec",
+        "n_queries": 2,
+        "sf": 0.1,
+        "worst_query": "b",
+        "worst_sec": 2.5,
+    }
+    assert len(json.dumps(recs[-1])) < 500  # survives tail truncation
+    # no floors at this sf: the headline still closes the output
+    recs = stdout_records(times, 0.01, None)
+    assert [r["metric"] for r in recs] == ["headline_queries_total"] * 2
+    assert "queries" not in recs[-1] and recs[-1]["sf"] == 0.01

@@ -1,5 +1,5 @@
-"""Merge-on-read deletion vectors (ManagedTable delete/update
-strategy="dv", the default): deleting k rows must write O(k) positions +
+"""Merge-on-read deletion vectors (every ManagedTable delete, update,
+replace_where and merge_by_key): deleting k rows must write O(k) positions +
 metadata — never rewrite a data file — while every read surface (native,
 declarative, time travel, compaction, vacuum, restore) stays exact.
 
@@ -138,19 +138,6 @@ def test_dv_time_travel_and_restore(spark, tmp_path):
     assert t.read().count() == 1000
     t.restore(v2)
     assert t.read().count() == 950
-
-
-def test_dv_cow_strategy_still_available_and_folds(spark, tmp_path):
-    """strategy='cow' keeps the classic rewrite path: candidate files are
-    replaced, surviving rows of PRIOR DVs are honored, and the rewritten
-    files carry no DV."""
-    t = _mk(spark, tmp_path / "t")
-    t.delete([("k", "<", 10)])  # dv
-    n = t.delete([("k", "<", 20)], strategy="cow")
-    assert n == 10
-    m = t.snapshot()
-    assert all(not f.dv_paths and not f.dv_rows for f in m.files)
-    assert t.read().count() == 980
 
 
 def test_dv_compact_folds_and_vacuum_reaps(spark, tmp_path):
@@ -316,9 +303,9 @@ def test_vacuum_vs_pinned_reader_race(spark, tmp_path):
 
 
 def test_dv_merge_by_key_rewrites_nothing(spark, tmp_path):
-    """merge_by_key default (DV): matched target rows tombstone, source
+    """merge_by_key (DV): matched target rows tombstone, source
     rows append — no pre-existing data file rewritten, convergence exact,
-    prior DVs honored, and strategy='cow' still folds everything."""
+    prior DVs honored."""
     t = ManagedTable.create(spark, tmp_path / "t", cluster_col="k")
     t.append(spark.range(0, 1000).selectExpr("id AS k", "CAST(0.0 AS DOUBLE) AS v"))
     t.delete([("k", ">=", 100), ("k", "<", 105)])  # prior DV
@@ -346,13 +333,6 @@ def test_dv_merge_by_key_rewrites_nothing(spark, tmp_path):
     out2 = t.read()
     assert out2.count() == out.count()
     assert out2.groupBy("k").count().filter("count > 1").count() == 0
-    # cow strategy folds all DVs away and converges identically
-    t.merge_by_key(src, "k", strategy="cow")
-    m3 = t.snapshot()
-    assert all(not f.dv_paths for f in m3.files)
-    assert {tuple(r) for r in t.read().collect()} == {
-        tuple(r) for r in out.collect()
-    }
 
 
 def test_dv_merge_on_partitioned_table(spark, tmp_path, lineitem):
@@ -451,16 +431,16 @@ def test_replace_where_empty_slice_just_inserts(spark, tmp_path):
     assert t.read().count() == 1010
 
 
-def test_replace_where_cow_matches_dv(spark, tmp_path):
-    ta = _mk(spark, tmp_path / "a")
-    tb = _mk(spark, tmp_path / "b")
+def test_replace_where_matches_expected_rows(spark, tmp_path):
+    """The slice [200, 300) is replaced by 20 rows: every other row
+    survives untouched and nothing else appears."""
+    t = _mk(spark, tmp_path / "t")
     repl = spark.range(200, 220).selectExpr("id AS k", "CAST(7 AS long) AS v")
     where = [("k", ">=", 200), ("k", "<", 300)]
-    assert ta.replace_where(repl, where, strategy="dv") == (100, 20)
-    assert tb.replace_where(repl, where, strategy="cow") == (100, 20)
-    assert sorted(map(tuple, ta.read().collect())) == sorted(
-        map(tuple, tb.read().collect())
-    )
+    assert t.replace_where(repl, where) == (100, 20)
+    expected = [(k, k % 7) for k in range(1000) if not 200 <= k < 300]
+    expected += [(k, 7) for k in range(200, 220)]
+    assert sorted(map(tuple, t.read().collect())) == sorted(expected)
 
 
 def test_dv_delete_under_symlinked_root(spark, tmp_path):

@@ -554,6 +554,41 @@ class TestBoundedDmlCommit:
         with pytest.raises(ValueError, match="unknown columns"):
             b.update(where=[("k", "=", 1)], set_exprs={"zz": 1})
 
+    def test_bounded_update_evicts_fully_updated_file(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """An update past the gate that matches every live row of one
+        file tombstones it whole: its entry leaves the manifest (removed
+        without re-add) while the rewritten rows land in new files, and
+        reads equal the classic twin's."""
+        a = self._mk(spark, tmp_path / "a")
+        b = self._mk(spark, tmp_path / "b")
+        keys = [k for k in range(1000) if k % 4 == 0]  # one file, every row
+        where = [("k", "in", keys)]
+        na = a.update(where=where, set_exprs={"v": 99})  # classic
+        before = {f.path for f in b.snapshot().files}
+        monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", 1)
+        regrown = []
+        real = ManagedTable._regrow_planned
+
+        def spy(sel, dv_files, per_file):
+            regrown.append(real(sel, dv_files, per_file))
+            return regrown[-1]
+
+        monkeypatch.setattr(ManagedTable, "_regrow_planned", staticmethod(spy))
+        nb = b.update(where=where, set_exprs={"v": 99})  # bounded
+        assert na == nb == len(keys)
+        assert b.snapshot().op == "update"
+        [(changed, removed)] = regrown
+        assert changed == () and len(removed) == 1  # evicted, not re-versioned
+        after = {f.path for f in b.snapshot().files}
+        assert before - after == removed
+        assert all(not f.dv_rows for f in b.snapshot().files)
+        assert sorted(map(tuple, b.read().collect())) == sorted(
+            map(tuple, a.read().collect())
+        )
+        assert b.read().filter("v = 99").count() == len(keys)
+
 
 def test_bounded_count_matches_snapshot(spark, tmp_path, monkeypatch):
     """count() past the gate folds the checkpoint header total + tail —
@@ -699,6 +734,58 @@ class TestBoundedIngestCommit:
         # updated keys present exactly once with the new value
         assert b.read(where=[("k", ">=", 990)]).filter("v = 42").count() == 20
         assert b.count() == 1010
+
+    def test_bounded_merge_double_key_falls_back(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A DOUBLE key has no sound span probe (NaN), so the bounded
+        merge declines and the classic merge runs on the SAME persisted
+        distinct-key frame — the source is de-duplicated once — with the
+        same rows and return value as the classic merge."""
+
+        def mk(root):
+            t = ManagedTable.create(spark, root)
+            base = spark.range(0, 400).selectExpr(
+                "CAST(id AS DOUBLE) AS k", "id % 7 AS v"
+            )
+            for i in range(4):
+                t.append(base.filter(F.col("k") % 4 == i).coalesce(1))
+            t._write_checkpoint(t.snapshot())
+            return t
+
+        a = mk(tmp_path / "a")
+        b = mk(tmp_path / "b")
+        src = spark.range(390, 410).selectExpr(
+            "CAST(id AS DOUBLE) AS k", "CAST(42 AS LONG) AS v"
+        )
+        na = a.merge_by_key(src, "k")  # classic
+        monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", 1)
+        seen = []
+        bounded, classic = ManagedTable._merge_dv_bounded, ManagedTable._merge_dv
+
+        def spy_bounded(self, source_df, keys, *rest):
+            seen.append(("bounded", keys))
+            done = bounded(self, source_df, keys, *rest)
+            seen.append(("bounded_done", done))
+            return done
+
+        def spy_classic(self, source_df, keys, *rest):
+            seen.append(("classic", keys))
+            return classic(self, source_df, keys, *rest)
+
+        monkeypatch.setattr(ManagedTable, "_merge_dv_bounded", spy_bounded)
+        monkeypatch.setattr(ManagedTable, "_merge_dv", spy_classic)
+        nb = b.merge_by_key(src, "k")
+        assert na == nb == 20
+        assert [tag for tag, _ in seen] == ["bounded", "bounded_done", "classic"]
+        assert seen[1][1] is False
+        assert seen[0][1] is seen[2][1]  # one key frame for both paths
+        assert b.snapshot().op == "merge"
+        assert sorted(map(tuple, b.read().collect())) == sorted(
+            map(tuple, a.read().collect())
+        )
+        assert b.read().filter("v = 42").count() == 20
+        assert b.count() == 410
 
     def test_streamed_checkpoint_on_bounded_cadence(
         self, spark, tmp_path, monkeypatch
