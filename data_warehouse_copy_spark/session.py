@@ -60,6 +60,9 @@ def get_spark(
         # BulkCopyManager.cs:182-195) share the cluster instead of FIFO-queueing.
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
+        # no stage progress bars on stderr (bench and CLI output stay
+        # parseable); extra_conf can turn them back on
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -84,7 +84,9 @@ and the honest workaround): (a) column pruning does not cross the
 Python-worker boundary — a bare ``.select("a")`` still scans every column;
 pass ``option("columns", "a,b")`` to narrow the declared schema (per-file
 reads then open only those parquet columns), or use the native
-``ManagedTable.read()`` JVM scan for projection-heavy analytics. (b) the
+``ManagedTable.read()`` JVM scan for projection-heavy analytics —
+``NamedCatalog.table`` already does for plain and snapshot-option reads
+by name. (b) the
 streaming API has no ReadLimit/admission-control hook, so rate limiting is
 implemented INSIDE the source (round-8 verdict item 3): ``latestOffset``
 caps its own advancement — ``option("maxCommitsPerTrigger", n)`` bounds
@@ -132,6 +134,7 @@ from data_warehouse_copy_spark.sources.managed_table import (
     _cdc_skip,
     _file_may_match,
     _map_where,
+    _nullable,
     _phys_map,
 )
 
@@ -235,16 +238,23 @@ def _parse_where_option(options: dict) -> list[tuple]:
     return [tuple(t) for t in triples]
 
 
+def _parse_columns_option(options: dict) -> list[str] | None:
+    """``option("columns", "a,b")`` as a name list; None when unset."""
+    raw = options.get("columns")
+    if not raw:
+        return None
+    return [c.strip() for c in raw.split(",") if c.strip()]
+
+
 def _narrow_schema_json(schema_json: str, options: dict) -> str:
     """Apply the ``columns`` option (comma-separated projection). The
     Python Data Source API pushes filters but NOT column pruning — a bare
     ``.select("a")`` still scans every column through the Python worker —
     so callers projecting a wide table declare the columns here and the
     per-file reads open only those parquet columns."""
-    cols_opt = options.get("columns")
-    if not cols_opt:
+    want = _parse_columns_option(options)
+    if want is None:
         return schema_json
-    want = [c.strip() for c in cols_opt.split(",") if c.strip()]
     schema = T.StructType.fromJson(json.loads(schema_json))
     by_name = {f.name: f for f in schema.fields}
     missing = [c for c in want if c not in by_name]
@@ -254,15 +264,6 @@ def _narrow_schema_json(schema_json: str, options: dict) -> str:
             f"(table has {sorted(by_name)})"
         )
     return T.StructType([by_name[c] for c in want]).json()
-
-
-def _nullable(schema: T.StructType) -> T.StructType:
-    """All-nullable copy: additive schema evolution null-fills columns in
-    files that predate them, so the source's declared schema must not
-    promise non-null — the same laundering Delta applies on evolution."""
-    return T.StructType(
-        [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema]
-    )
 
 
 #: virtual column carrying the producing commit on CDC reads

@@ -1966,10 +1966,7 @@ class ManagedTable:
             schema = _narrow_struct(schema, columns)
         # all-nullable declared schema: old files null-backfill added
         # columns, exactly like the declarative reader's contract
-        out_schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True, f.metadata)
-             for f in schema.fields]
-        )
+        out_schema = _nullable(schema)
         out_json = out_schema.json()
         mdf = self.manifest_df(v).select("path", "dv_paths")
         n = self.spark.sparkContext.defaultParallelism
@@ -2054,6 +2051,12 @@ class ManagedTable:
             if version is not None:
                 raise ValueError("pass version OR timestamp, not both")
             version = self.version_at(timestamp)
+        elif version is not None:
+            head = self._head_version()
+            if not 0 <= version <= head:
+                raise ValueError(
+                    f"version {version} outside the table history 0..{head}"
+                )
         if (
             where is None
             and partition_min is None
@@ -2108,8 +2111,11 @@ class ManagedTable:
             # no partition at all, not the 32-way default parallelism: a
             # pruned-to-zero read costs no task, and a plan unioning many
             # point probes must not pay 32 empty tasks per probe (24 bloom
-            # probes did: a 768-task no-op stage)
-            empty = _empty_frame(self.spark, schema or T.StructType([]))
+            # probes did: a 768-task no-op stage). All-nullable, like
+            # the parquet scan's schema when files survive.
+            empty = _empty_frame(
+                self.spark, _nullable(schema or T.StructType([]))
+            )
             return empty.select(*columns) if columns is not None else empty
         # Read under the MANIFEST schema, not the first file's: after an
         # additive schema evolution (append(merge_schema=True)) old files
@@ -2186,13 +2192,29 @@ class ManagedTable:
         session-less pyarrow twin): declaring it here skips parquet
         schema inference — a per-call footer-open round trip that every
         DV-bearing read, delete, merge and CDF plan was paying (round-15;
-        on an object store that inference is a remote GET per plan)."""
+        on an object store that inference is a remote GET per plan).
+        A declared column a file lacks reads as NULL, and a NULL key
+        would let the anti-join bring deleted rows back, so a NULL
+        ``file_path`` or ``pos`` raises inside the scan instead — no
+        extra job, no footer read."""
         raw = self.spark.read.schema(
             "file_uri string, file_path string, pos long"
         ).parquet(*[str(self.root / p) for p in dv_paths])
-        pos = F.col("pos").alias("__dwcs_dv_pos")
+
+        def key(c: str) -> "F.Column":
+            return F.when(
+                F.col(c).isNull(),
+                F.raise_error(
+                    F.lit(
+                        f"deletion vector row with NULL {c} in table "
+                        f"{self.root}: DV parquet schema drifted"
+                    )
+                ),
+            ).otherwise(F.col(c))
+
+        pos = key("pos").alias("__dwcs_dv_pos")
         return raw.select(
-            F.col("file_path").alias("__dwcs_dv_rel"), pos
+            key("file_path").alias("__dwcs_dv_rel"), pos
         ).unionAll(
             raw.select(
                 self._canonicalize_uri(F.col("file_uri")).alias("__dwcs_dv_rel"),
@@ -8358,6 +8380,16 @@ def _validate_merge_assignments(
             raise ValueError(
                 f"merge() must not assign its key columns {overlap}"
             )
+
+
+def _nullable(schema: T.StructType) -> T.StructType:
+    """All-nullable copy: additive schema evolution null-fills columns in
+    files that predate them, so a read's schema must not promise
+    non-null — the same laundering Delta applies on evolution (and the
+    schema Spark's parquet scan gives every read anyway)."""
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema]
+    )
 
 
 def _empty_frame(spark: SparkSession, schema: "T.StructType") -> DataFrame:

@@ -7,9 +7,16 @@ catalog (``TableConfig`` rows name ``schema_name.table_name``,
 mapping (one JSON file, atomically rewritten) plus two access surfaces:
 
 - :meth:`NamedCatalog.table` — the canonical programmatic path: a FRESH
-  ``spark.read.format("managed_table")`` per call, so every lookup is a
-  live, snapshot-isolated read of the current head (exactly the semantics
-  ``spark.table`` has on Delta).
+  read per call, so every lookup is a live, snapshot-isolated read of the
+  current head (exactly the semantics ``spark.table`` has on Delta). A
+  plain read, and one with only the snapshot options ``versionAsOf``,
+  ``timestampAsOf``, ``where`` or ``columns``, is
+  :meth:`ManagedTable.read` — Spark's native parquet scan (column
+  pruning, filter pushdown, size statistics for broadcast decisions, no
+  Python-worker crossing per row). The log and change-feed options
+  (``history``, ``files``, ``changesFrom``/``changesTo``, ``changeFeed``)
+  go through ``spark.read.format("managed_table")``, their only
+  implementation.
 - :meth:`NamedCatalog.attach` — the pure-SQL path: registers every entry
   as a GLOBAL TEMPORARY VIEW, making ``spark.table("<db>.<name>")`` and
   ``SELECT ... FROM <db>.<name>`` resolve for any session of the app.
@@ -49,6 +56,10 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: reader options :meth:`NamedCatalog.table` serves from the native scan
+#: (lower-cased, as Spark matches reader options)
+_SNAPSHOT_OPTIONS = frozenset({"versionasof", "timestampasof", "where", "columns"})
 
 
 class NamedCatalog:
@@ -170,7 +181,9 @@ class NamedCatalog:
         return sorted(self._load())
 
     def root_of(self, name: str) -> str:
-        tables = self._load()
+        return self._root_in(self._load(), name)
+
+    def _root_in(self, tables: dict, name: str) -> str:
         if name not in tables:
             raise KeyError(
                 f"{name!r} not in catalog {self.path} "
@@ -326,16 +339,33 @@ class NamedCatalog:
     # ------------------------------------------------------------- access
 
     def table(self, spark: SparkSession, name: str, **options) -> DataFrame:
-        """Live read of ``db.table``: a fresh declarative load per call —
+        """Live read of ``db.table``: a fresh read per call —
         snapshot-isolated at the CURRENT head, like ``spark.table`` on
-        Delta. Extra ``options`` pass through (``where=...``,
-        ``versionAsOf=...``, ...). A VIEW name resolves through the
-        same inlining SQL reads use (reader options don't apply — a
-        view has no relation of its own)."""
-        from data_warehouse_copy_spark.sources.datasource import register
+        Delta.
 
-        register(spark)
-        if name in self._doc()["matviews"]:
+        With no options, or only the snapshot options ``versionAsOf``,
+        ``timestampAsOf``, ``where`` (the declarative reader's JSON
+        triples) and ``columns`` (``"a,b"``), the read is
+        :meth:`ManagedTable.read` — Spark's native parquet scan, with
+        column pruning, filter pushdown and size statistics, and no
+        Python-worker crossing. ``where`` is applied exactly here (the
+        declarative reader only prunes files by it). Any other option
+        (``history``, ``files``, ``changesFrom``/``changesTo``,
+        ``changeFeed``, ...) goes through ``spark.read.format(
+        "managed_table")``, the only implementation of the log and
+        change-feed reads. Option names match case-insensitively, as
+        reader options do. A VIEW name resolves through the same
+        inlining SQL reads use (reader options don't apply — a view has
+        no relation of its own)."""
+        from data_warehouse_copy_spark.sources.datasource import (
+            _parse_columns_option,
+            _parse_where_option,
+            _require_table,
+            register,
+        )
+
+        doc = self._doc()
+        if name in doc["matviews"]:
             if options:
                 raise ValueError(
                     f"{name!r} is a materialized view — reader options "
@@ -346,7 +376,7 @@ class NamedCatalog:
             )
 
             return MaterializedView(spark, self, name).read()
-        if name in self._doc()["views"]:
+        if name in doc["views"]:
             if options:
                 raise ValueError(
                     f"{name!r} is a view — reader options like "
@@ -362,13 +392,29 @@ class NamedCatalog:
             return spark.sql(
                 _resolve_matviews(
                     spark, self,
-                    resolve_view_text(spark, self, self.view_sql(name)),
+                    resolve_view_text(spark, self, doc["views"][name]["sql"]),
                 )
             )
+        root = self._root_in(doc["tables"], name)
+        opts = {k.lower(): v for k, v in options.items()}
+        if set(opts) <= _SNAPSHOT_OPTIONS:
+            from data_warehouse_copy_spark.sources.managed_table import (
+                ManagedTable,
+            )
+
+            _require_table(root)
+            v = opts.get("versionasof")
+            return ManagedTable(spark, root).read(
+                version=int(v) if v is not None else None,
+                timestamp=opts.get("timestampasof"),
+                where=_parse_where_option(opts) or None,
+                columns=_parse_columns_option(opts),
+            )
+        register(spark)
         reader = spark.read.format("managed_table")
         for k, v in options.items():
             reader = reader.option(k, v)
-        return reader.load(self.root_of(name))
+        return reader.load(root)
 
     def sql(self, spark: SparkSession, query: str) -> DataFrame:
         """Catalog-aware SQL: ``DELETE``/``UPDATE``/``MERGE INTO`` on a

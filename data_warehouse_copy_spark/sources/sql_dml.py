@@ -5247,9 +5247,9 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
         return _summary(spark, "UPDATE", n)
     # merge
     if st.source is not None:
-        # dotted names resolve through the catalog (live managed-table
-        # read); bare names are session views — including the pinned
-        # views a time-travel rewrite just registered, so
+        # dotted names resolve through the catalog (a live native scan
+        # of the managed table); bare names are session views —
+        # including the pinned views a time-travel rewrite just registered, so
         # `USING db.src VERSION AS OF n` works as a merge source
         source_df = (
             catalog.table(spark, st.source)

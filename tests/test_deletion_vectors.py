@@ -188,6 +188,34 @@ def test_dv_declarative_reader_matches_native(spark, tmp_path):
     assert pruned.filter((F.col("k") >= 100) & (F.col("k") < 110)).count() == 0
 
 
+def test_dv_with_drifted_column_names_raises(spark, tmp_path):
+    """A DV parquet whose columns were renamed reads as NULL join keys
+    under the declared DV schema; the anti-join would then return the
+    deleted rows. Both native read surfaces must raise instead."""
+    import pyarrow.parquet as pq
+    from pyspark.errors import SparkRuntimeException
+
+    from data_warehouse_copy_spark.sources.names import NamedCatalog
+
+    t = _mk(spark, tmp_path / "t")
+    t.delete([("k", ">=", 100), ("k", "<", 110)])
+    c = NamedCatalog(tmp_path / "catalog.json")
+    c.register("db.t", tmp_path / "t")
+    assert c.table(spark, "db.t").count() == 990  # intact DVs read as before
+    (dv,) = {d for f in t.snapshot().files for d in f.dv_paths}
+    path = tmp_path / "t" / dv
+    tbl = pq.read_table(path)
+    assert tbl.num_rows == 10
+    pq.write_table(
+        tbl.rename_columns([f"drifted_{n}" for n in tbl.column_names]), path
+    )
+    # Spark's writer left a checksum sidecar the new bytes would fail
+    path.with_name(f".{path.name}.crc").unlink(missing_ok=True)
+    for df in (t.read(), c.table(spark, "db.t")):
+        with pytest.raises(SparkRuntimeException, match="NULL (pos|file_path)"):
+            df.collect()
+
+
 def test_dv_cdc_skips_metadata_readds(spark, tmp_path):
     """A DV commit re-adds its files' paths with grown vectors — bytes
     unchanged. The CDC cursor must NOT replay them (double delivery); an

@@ -119,6 +119,123 @@ def test_dropping_name_keeps_data(spark, cat):
     assert t.read().count() == 100  # the NAME died, the table did not
 
 
+# ------------------------------------------------- native read by name
+# table() serves plain and snapshot-option reads from ManagedTable.read
+# (the native parquet scan); the declarative reader stays the reference
+# these reads must equal, and the only path for log/change-feed options.
+
+
+@pytest.fixture(scope="module")
+def evolved(spark, tmp_path_factory):
+    """A registered 1,000-row table carrying DVs (a delete and an update)
+    and a column-mapping rename plus an added column on top."""
+    d = tmp_path_factory.mktemp("native_read")
+    t = ManagedTable.create(spark, d / "t")
+    t.append(
+        spark.range(0, 1000).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 7).alias("v"),
+            (F.col("id") * 2).alias("w"),
+        )
+    )
+    t.delete([("k", ">=", 100), ("k", "<", 150)])
+    t.update([("k", ">=", 600), ("k", "<", 640)], {"v": "v + 100"})
+    t.rename_column("w", "w2")
+    t.add_column("x", "string")
+    c = NamedCatalog(d / "catalog.json")
+    c.register("db.t", d / "t")
+    return c, t, str(d / "t")
+
+
+def _ds(spark, root, **options):
+    from data_warehouse_copy_spark.sources.datasource import register
+
+    register(spark)
+    reader = spark.read.format("managed_table")
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load(root)
+
+
+def _same(a, b):
+    from collections import Counter
+
+    assert [(f.name, f.dataType, f.nullable) for f in a.schema] == [
+        (f.name, f.dataType, f.nullable) for f in b.schema
+    ]
+    assert Counter(a.collect()) == Counter(b.collect())
+
+
+def test_table_native_read_equals_declarative_reader(spark, evolved):
+    c, t, root = evolved
+    assert t.snapshot().files and any(f.dv_paths for f in t.snapshot().files)
+    _same(c.table(spark, "db.t"), _ds(spark, root))
+    assert c.table(spark, "db.t").count() == 950
+    # version 1 is the first append: no DV, no rename
+    _same(c.table(spark, "db.t", versionAsOf=1), _ds(spark, root, versionAsOf=1))
+    ts = t.history()[2].ts  # the delete's commit
+    _same(
+        c.table(spark, "db.t", timestampAsOf=ts),
+        _ds(spark, root, timestampAsOf=ts),
+    )
+    assert c.table(spark, "db.t", timestampAsOf=ts).count() == 950
+    _same(c.table(spark, "db.t", columns="k,v"), _ds(spark, root, columns="k,v"))
+    where = '[["k", ">=", 500]]'
+    _same(
+        c.table(spark, "db.t", where=where),
+        _ds(spark, root, where=where).filter("k >= 500"),
+    )
+    # stats prune every file: the empty frame keeps the scan's schema
+    where = '[["k", ">", 5000]]'
+    _same(c.table(spark, "db.t", where=where), _ds(spark, root, where=where))
+    # option names match case-insensitively, as reader options do
+    assert c.table(spark, "db.t", VERSIONASOF="1").count() == 1000
+    with pytest.raises(ValueError, match="outside the table history"):
+        c.table(spark, "db.t", versionAsOf=99)
+
+
+def test_table_plain_read_is_a_native_scan_of_live_files(spark, evolved):
+    c, t, root = evolved
+    df = c.table(spark, "db.t")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan managed_table" not in plan
+    ds = _ds(spark, root)
+    ds.collect()
+    assert "BatchScan managed_table" in ds._jdf.queryExecution().executedPlan().toString()
+    files = t.snapshot().files
+    read = {f.removeprefix("file://") for f in df.inputFiles()}
+    # the live data files, plus the DV parquets the anti-join reads
+    assert {p for p in read if "/_dv/" not in p} == {
+        str(Path(root) / f.path) for f in files
+    }
+    assert {p for p in read if "/_dv/" in p} == {
+        str(Path(root) / d) for f in files for d in f.dv_paths
+    }
+
+
+def test_table_log_options_still_use_declarative_reader(spark, evolved):
+    c, _, root = evolved
+    for opts in ({"history": "true"}, {"files": "true"}, {"changesFrom": "0"}):
+        got = c.table(spark, "db.t", **opts)
+        assert "BatchScan managed_table" in (
+            got._jdf.queryExecution().executedPlan().toString()
+        )
+        _same(got, _ds(spark, root, **opts))
+
+
+def test_table_of_deleted_root_raises(spark, tmp_path):
+    import shutil
+
+    c = NamedCatalog(tmp_path / "catalog.json")
+    t = ManagedTable.create(spark, tmp_path / "gone")
+    t.append(spark.range(3).selectExpr("id AS k"))
+    c.register("db.gone", tmp_path / "gone")
+    shutil.rmtree(tmp_path / "gone")
+    with pytest.raises(ValueError, match="no managed table"):
+        c.table(spark, "db.gone")
+
+
 # ---------------------------------------------------------------- SQL DML
 
 
