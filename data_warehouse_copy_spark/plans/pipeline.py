@@ -1,23 +1,33 @@
 """Run orchestration — the reference's ``BulkCopyManager.Run`` (entry point A,
 SURVEY.md §3.1) as a pure-Python driver over DataFrame pipelines.
 
-Fixed execution order preserved (``BulkCopyManager.cs:113-197``):
+Execution order: sprocs, then every table's chain concurrently.
 
-1. stored procedures (with the hour-0 midnight override, O15) — errors
-   RETHROW and abort the run;
-2. copy+update facts, sequentially: CopyTable then UpdateTable each;
-3. normal facts, sequentially;
-4. dims in parallel (``Parallel.ForEach`` -> ``ThreadPoolExecutor``; Spark's
-   FAIR scheduler interleaves the concurrent jobs);
-5. ``historical`` tables are classified but never processed — the
+1. stored procedures first, in config order (with the hour-0 midnight
+   override, O15) — errors RETHROW and abort the run;
+2. then one chain per target table, all chains on one thread pool:
+   a copy+update fact runs CopyTable then UpdateTable on one thread, a
+   normal fact its CopyTable, a dim its truncate reload. Specs naming the
+   same target share one chain, in config order. Spark's FAIR scheduler
+   interleaves the concurrent jobs;
+3. ``historical`` tables are classified but never processed — the
    reference's dead code, kept as observable surface (SURVEY.md §7 risk 5).
 
-Per-table errors in 2-4 are caught, audited as Failed, and the run continues
-(reference O18, ``TableCopyService.cs:178-205``).
+Documented divergence: the reference runs the facts one after another and
+only the dims in parallel (``BulkCopyManager.cs:137-179``). Running every
+chain at once is safe because a chain commits only its own target, and
+audit appends from concurrent chains CAS-rebase (compare-and-swap) onto
+each other. ``RunResult.outcomes`` keeps the reference's order
+(copy+update facts, normal facts, dims), whatever order chains finish in.
+
+Per-table errors in 2 are caught, audited as Failed, and the run continues
+(reference O18, ``TableCopyService.cs:178-205``); a failed copy is still
+followed by its table's update.
 """
 
 from __future__ import annotations
 
+import contextvars
 import logging
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -103,7 +113,6 @@ def run(
     now: datetime | None = None,
     sprocs: SprocRegistry | None = None,
     audit: bool = True,
-    max_dim_workers: int = 5,
 ) -> RunResult:
     from data_warehouse_copy_spark.plans.logfiles import setup_run_logging, teardown
     from data_warehouse_copy_spark.window import derive_window, midnight_override
@@ -111,7 +120,7 @@ def run(
     now = now or datetime.now()
     run_handler = setup_run_logging(config.log_dir, now) if config.log_dir else None
     try:
-        return _run_inner(spark, config, now, sprocs, audit, max_dim_workers)
+        return _run_inner(spark, config, now, sprocs, audit)
     finally:
         if run_handler is not None:
             teardown(run_handler)  # reference Log.CloseAndFlush (Program.cs:39)
@@ -123,7 +132,6 @@ def _run_inner(
     now: datetime,
     sprocs: SprocRegistry | None,
     audit: bool,
-    max_dim_workers: int,
 ) -> RunResult:
     from data_warehouse_copy_spark.plans.logfiles import per_table_log
     from data_warehouse_copy_spark.window import derive_window, midnight_override
@@ -240,22 +248,46 @@ def _run_inner(
                 )
             return TableOutcome(spec.table_name, "Update", "Failed", 0, str(exc))
 
-    # 2. copy+update facts, sequential (BulkCopyManager.cs:137-163)
-    for spec in classes.copy_update:
-        result.outcomes.append(do_copy(spec, use_truncate=False))
-        result.outcomes.append(do_update(spec))
+    def run_step(spec: TableSpec, kind: str) -> list[TableOutcome]:
+        if kind == "dim":
+            return [do_copy(spec, use_truncate=True)]
+        copied = do_copy(spec, use_truncate=False)
+        # a copy+update fact's update follows its copy, even a failed one
+        return [copied, do_update(spec)] if kind == "copy_update" else [copied]
 
-    # 3. normal facts, sequential (:166-179)
-    for spec in classes.normal:
-        result.outcomes.append(do_copy(spec, use_truncate=False))
+    def run_chain(chain: list) -> list[tuple[int, list[TableOutcome]]]:
+        return [(i, run_step(spec, kind)) for i, spec, kind in chain]
 
-    # 4. dims in parallel (:182-195); FAIR scheduler interleaves the jobs
-    if classes.truncate:
-        with ThreadPoolExecutor(max_workers=max_dim_workers) as pool:
+    # 2. one chain per target table, all concurrently. ``i`` is the spec's
+    # config position: chains keep config order, outcomes the reference's.
+    kinds = (
+        ("copy_update", classes.copy_update),
+        ("normal", classes.normal),
+        ("dim", classes.truncate),
+    )
+    kind_of = {id(s): kind for kind, specs in kinds for s in specs}
+    steps = [
+        (i, spec, kind_of[id(spec)])
+        for i, spec in enumerate(config.tables)
+        if id(spec) in kind_of
+    ]
+    chains: dict[str, list] = {}
+    for step in steps:
+        chains.setdefault(
+            target_table_path(config, step[1].table_name), []
+        ).append(step)
+    if chains:
+        width = min(len(chains), spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=width) as pool:
             futures = [
-                pool.submit(do_copy, spec, True) for spec in classes.truncate
+                pool.submit(contextvars.copy_context().run, run_chain, chain)
+                for chain in chains.values()
             ]
-            result.outcomes.extend(f.result() for f in futures)
+            outcomes = dict(pair for f in futures for pair in f.result())
+        for kind, _ in kinds:
+            for i, _, k in steps:
+                if k == kind:
+                    result.outcomes.extend(outcomes[i])
 
     return result
 

@@ -55,6 +55,7 @@ last-commit-wins would silently lose data.
 
 from __future__ import annotations
 
+import contextvars
 import json
 import logging
 import os
@@ -63,6 +64,7 @@ import shutil
 import threading
 import uuid
 from collections import defaultdict
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, replace as _dc_replace
 from datetime import date, datetime, timezone
 from pathlib import Path
@@ -3494,8 +3496,6 @@ class ManagedTable:
             )
 
         # footer reads are driver-side IO — pooled, like _write_files
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=16) as pool:
             entries = tuple(pool.map(entry_for, files))
         t = cls.create(spark, root)
@@ -5599,6 +5599,12 @@ class ManagedTable:
         rows append as new files. A merge touches O(matched rows + source
         rows), never a partition rewrite; :meth:`compact` folds the DVs.
 
+        The two writes overlap. Once the source's CHECK constraints are
+        proven, the new rows' write starts on a worker thread while this
+        thread counts the keys, plans the candidate files and writes the
+        DV; the one commit waits for both. If either side fails, the
+        other is joined and nothing commits.
+
         No key set ever reaches the driver (reference O8 ``collect`` is
         deliberately NOT ported, SURVEY.md §7 risk 6). Returns the number of
         distinct keys merged — matching the reference's metric, which reports
@@ -5629,6 +5635,30 @@ class ManagedTable:
                     f"DEFAULT AS IDENTITY column(s) {missing}"
                 )
         with _lock_for(self.root):
+            # Read the head once: the bounded base past the gate, else the
+            # snapshot. The new-row write and the DV plan both build on it.
+            b = self._bounded_ingest_base()
+            if b is None or b[1] is None:
+                b, m = None, self.snapshot()
+                schema_json, constraints = m.schema_json, m.constraints
+                part_col, cluster_col, bloom_cols, columns = (
+                    m.partition_date_col, m.cluster_col, m.bloom_cols,
+                    m.columns,
+                )
+            else:
+                m = None
+                schema_json, constraints = b[1], b[7]
+                part_col, cluster_col, bloom_cols, columns = b[3:7]
+            rows = source_df  # a fresh table adopts the source's schema
+            if schema_json:
+                cols = [
+                    f.name
+                    for f in T.StructType.fromJson(json.loads(schema_json)).fields
+                ]
+                # eager: a violating source raises before anything is written
+                rows = self._enforce_constraints(
+                    source_df.select(*cols), constraints, "merge"
+                )
             # The distinct-key frame feeds THREE separate actions (count,
             # span probe, position semi-join), in whichever path runs —
             # and in both when the bounded path declines. Unpersisted, each
@@ -5640,12 +5670,26 @@ class ManagedTable:
             # semi-join's broadcast decision accurate.
             keys = source_df.select(primary_key).distinct().persist()
             try:
-                n_keys = keys.count()
-                b = self._bounded_ingest_base()
-                if b is None or b[1] is None or not self._merge_dv_bounded(
-                    source_df, keys, n_keys, primary_key, b
-                ):
-                    self._merge_dv(source_df, keys, n_keys, primary_key)
+                # The new rows do not depend on which old rows match, so
+                # their write runs beside the key count, candidate plan and
+                # DV write. Leaving the block joins the writer, also when
+                # either side raised: nothing commits then, and the orphans
+                # are vacuum's, as on any failed write.
+                with ThreadPoolExecutor(max_workers=1) as pool:
+                    written = pool.submit(
+                        contextvars.copy_context().run,
+                        self._write_files, rows, part_col, cluster_col,
+                        bloom_cols=bloom_cols, columns=columns,
+                    )
+                    n_keys = keys.count()
+                    if b is None or not self._merge_dv_bounded(
+                        written, keys, n_keys, primary_key, b
+                    ):
+                        self._merge_dv(
+                            written, keys, n_keys, primary_key,
+                            m if m is not None else self.snapshot(b[0]),
+                            schema_json or source_df.schema.json(),
+                        )
             finally:
                 keys.unpersist()
         self._sync_identity_past_source(specs, source_df)
@@ -5747,24 +5791,26 @@ class ManagedTable:
         ]
 
     def _merge_dv_bounded(
-        self, source_df: DataFrame, keys: DataFrame, n_keys: int,
-        primary_key: str, b,
+        self, written: "Future[tuple[FileEntry, ...]]", keys: DataFrame,
+        n_keys: int, primary_key: str, b,
     ) -> bool:
         """Bounded DV merge of the persisted distinct ``keys``: the
         pk-span candidate probe runs over :meth:`manifest_df`
         (checkpoint-backed — the span frame never exists driver-side in
-        Python) and the commit is an O(touched) action diff. ``False`` →
-        nothing committed, classic fallback: non-integer/string pk (float
-        spans exclude NaN — the same soundness rule
-        :meth:`_affected_files_by_stats` enforces), a file without exact
-        pk stats (candidates would be "every file" and the classic scan
-        owns that shape), or a pk name JSON-path extraction can't
-        address."""
-        head, schema_json, _txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-        schema = T.StructType.fromJson(json.loads(schema_json))
+        Python) and the commit is an O(touched) action diff. ``written``
+        is the pending write of the new rows. ``False`` → nothing
+        committed and ``written`` left to the classic fallback:
+        non-integer/string pk (float spans exclude NaN — the same
+        soundness rule :meth:`_affected_files_by_stats` enforces), a file
+        without exact pk stats (candidates would be "every file" and the
+        classic scan owns that shape), or a pk name JSON-path extraction
+        can't address."""
+        head, schema_json, _txns, _part, _cluster, _bloom, columns, _c = b
         if n_keys == 0:
+            written.result()
             self._commit_bounded(head, (), set(), "merge_noop")
             return True
+        schema = T.StructType.fromJson(json.loads(schema_json))
         sel = self._bounded_span_candidates(
             head, keys, primary_key, schema, columns
         )
@@ -5781,27 +5827,20 @@ class ManagedTable:
                 changed, removed = self._regrow_planned(
                     sel, dv_files, per_file
                 )
-        cols = [f.name for f in schema.fields]
-        checked = self._enforce_constraints(
-            source_df.select(*cols), constraints, "merge"
-        )
-        new_files = self._write_files(
-            checked, part_col, cluster_col,
-            bloom_cols=bloom_cols,
-            columns=columns,
-        )
+        new_files = written.result()
         self._commit_bounded(head, changed + new_files, removed, "merge")
         return True
 
     def _merge_dv(
-        self, source_df: DataFrame, keys: DataFrame, n_keys: int,
-        primary_key: str,
+        self, written: "Future[tuple[FileEntry, ...]]", keys: DataFrame,
+        n_keys: int, primary_key: str, m: Manifest, schema_json: str,
     ) -> None:
         """Classic (full-manifest) DV merge of the persisted distinct
-        ``keys``."""
-        m = self.snapshot()
+        ``keys`` over snapshot ``m``; ``written`` is the pending write of
+        the new rows, committed under ``schema_json``."""
         if n_keys == 0:
             # Empty key set still commits + completes (TableUpdateService.cs:167-172)
+            written.result()
             self._commit_files(m, tuple(m.files), m.schema_json, "merge_noop")
             return
         # Candidate files by pk span (works partitioned or not — footer
@@ -5822,29 +5861,8 @@ class ManagedTable:
             dv_files, per_file = self._write_dv(hits)
             if dv_files is not None:
                 files = self._grow_dv(m.files, dv_files, per_file)
-        if m.schema_json:
-            cols = [
-                f.name
-                for f in T.StructType.fromJson(json.loads(m.schema_json)).fields
-            ]
-            checked = self._enforce_constraints(
-                source_df.select(*cols), m.constraints, "merge"
-            )
-            new_files = self._write_files(
-                checked, m.partition_date_col, m.cluster_col,
-                bloom_cols=m.bloom_cols,
-                columns=m.columns,
-            )
-            self._commit_files(m, files + new_files, m.schema_json, "merge")
-        else:  # first data into a fresh table: adopt the source schema
-            new_files = self._write_files(
-                source_df, m.partition_date_col, m.cluster_col,
-                bloom_cols=m.bloom_cols,
-                columns=m.columns,
-            )
-            self._commit_files(
-                m, files + new_files, source_df.schema.json(), "merge"
-            )
+        new_files = written.result()
+        self._commit_files(m, files + new_files, schema_json, "merge")
 
     def merge(
         self,
@@ -6851,10 +6869,10 @@ class ManagedTable:
         # would serialize into seconds, so read them in a thread pool.
         # Ordered map keeps the manifest deterministic.
         paths = sorted(final.rglob("*.parquet"))
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=min(16, max(1, len(paths)))) as pool:
             entries = [e for e in pool.map(entry_for, paths) if e is not None]
+        if not entries:  # only empty files: keep no unreferenced dir
+            shutil.rmtree(final, ignore_errors=True)
         if bloom_cols and entries:
             from dataclasses import replace
 

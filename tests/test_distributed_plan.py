@@ -740,8 +740,9 @@ class TestBoundedIngestCommit:
     ):
         """A DOUBLE key has no sound span probe (NaN), so the bounded
         merge declines and the classic merge runs on the SAME persisted
-        distinct-key frame — the source is de-duplicated once — with the
-        same rows and return value as the classic merge."""
+        distinct-key frame — the source is de-duplicated once — and the
+        SAME pending write of the source rows — the source is written
+        once — with the same rows and return value as the classic merge."""
 
         def mk(root):
             t = ManagedTable.create(spark, root)
@@ -761,25 +762,35 @@ class TestBoundedIngestCommit:
         na = a.merge_by_key(src, "k")  # classic
         monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", 1)
         seen = []
+        writes = []
         bounded, classic = ManagedTable._merge_dv_bounded, ManagedTable._merge_dv
+        write_files = ManagedTable._write_files
 
-        def spy_bounded(self, source_df, keys, *rest):
-            seen.append(("bounded", keys))
-            done = bounded(self, source_df, keys, *rest)
+        def spy_bounded(self, written, keys, *rest):
+            seen.append(("bounded", (written, keys)))
+            done = bounded(self, written, keys, *rest)
             seen.append(("bounded_done", done))
             return done
 
-        def spy_classic(self, source_df, keys, *rest):
-            seen.append(("classic", keys))
-            return classic(self, source_df, keys, *rest)
+        def spy_classic(self, written, keys, *rest):
+            seen.append(("classic", (written, keys)))
+            return classic(self, written, keys, *rest)
+
+        def spy_write(self, *args, **kwargs):
+            entries = write_files(self, *args, **kwargs)
+            writes.append(sum(e.rows for e in entries))
+            return entries
 
         monkeypatch.setattr(ManagedTable, "_merge_dv_bounded", spy_bounded)
         monkeypatch.setattr(ManagedTable, "_merge_dv", spy_classic)
+        monkeypatch.setattr(ManagedTable, "_write_files", spy_write)
         nb = b.merge_by_key(src, "k")
         assert na == nb == 20
         assert [tag for tag, _ in seen] == ["bounded", "bounded_done", "classic"]
         assert seen[1][1] is False
-        assert seen[0][1] is seen[2][1]  # one key frame for both paths
+        assert seen[0][1][0] is seen[2][1][0]  # one pending write for both
+        assert seen[0][1][1] is seen[2][1][1]  # one key frame for both paths
+        assert writes == [20]  # the source rows, written by one call
         assert b.snapshot().op == "merge"
         assert sorted(map(tuple, b.read().collect())) == sorted(
             map(tuple, a.read().collect())

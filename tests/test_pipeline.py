@@ -346,3 +346,136 @@ def test_cli_maintenance_commands(spark, tmp_path, capsys):
     assert main(["maintenance", "restore", root, "--version", str(v)], spark=spark) == 0
     assert f"recommitted as v{v + 1}" in capsys.readouterr().out
     assert t.read().count() == 30
+
+
+def _orders_spec(name):
+    return {
+        "table_name": name,
+        "table_type": "fact",
+        "date_column": "o_orderdate",
+        "update_date_column": "update_datetime",
+        "primary_key": "o_orderkey",
+    }
+
+
+@pytest.fixture()
+def upsert_src(spark, tmp_path, sf_dir):
+    """A source dir for copy+update facts: ``orders`` and its twin
+    ``orders2`` carry the derived ``update_datetime`` (FIXTURES.md),
+    beside the fixture's ``lineitem``."""
+    src = tmp_path / "src"
+    src.mkdir()
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").withColumn(
+        "update_datetime",
+        F.timestamp_add(
+            "DAY", (F.col("o_orderkey") % 40).cast("int"), F.col("o_orderdate")
+        ),
+    ).coalesce(1)
+    for name in ("orders", "orders2"):
+        orders.write.parquet(str(src / f"{name}.parquet"))
+    (src / "lineitem.parquet").symlink_to(f"{sf_dir}/lineitem.parquet")
+    return str(src)
+
+
+def test_table_chains_run_concurrently(spark, tmp_path, upsert_src, monkeypatch):
+    """The orders update waits for the lineitem copy to start: it can only
+    see it start when the two tables' chains overlap."""
+    import threading
+
+    from data_warehouse_copy_spark.plans import pipeline
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one core: the pool runs one chain at a time")
+    started, waited = threading.Event(), []
+    copy, update = pipeline.copy_table, pipeline.update_table
+
+    def spy_copy(src, target, table_name, *rest):
+        if table_name == "lineitem":
+            started.set()
+        return copy(src, target, table_name, *rest)
+
+    def spy_update(*args):
+        waited.append(started.wait(10))
+        return update(*args)
+
+    monkeypatch.setattr(pipeline, "copy_table", spy_copy)
+    monkeypatch.setattr(pipeline, "update_table", spy_update)
+    cfg = _cfg(
+        tmp_path,
+        upsert_src,
+        [
+            _orders_spec("orders"),
+            {
+                "table_name": "lineitem",
+                "table_type": "fact",
+                "date_column": "l_shipdate",
+            },
+        ],
+    )
+    res = run(spark, cfg, now=datetime(2026, 8, 13, 12, 0), audit=False)
+    assert waited == [True]
+    assert [(o.table, o.process, o.status) for o in res.outcomes] == [
+        ("orders", "Copy", "Completed"),
+        ("orders", "Update", "Completed"),
+        ("lineitem", "Copy", "Completed"),
+    ]
+
+
+def test_merge_writer_logs_stay_in_their_table_log(
+    spark, tmp_path, upsert_src, monkeypatch
+):
+    """merge_by_key writes its new rows on a worker thread; that thread's
+    records must reach its own table's log and no other."""
+    import logging
+
+    from data_warehouse_copy_spark.plans.logfiles import PKG_LOGGER
+
+    marker = logging.getLogger(PKG_LOGGER + ".markertest")
+    write_files = ManagedTable._write_files
+
+    def spy(self, *args, **kwargs):
+        marker.info("write marker for [%s]", self.root.name)
+        return write_files(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManagedTable, "_write_files", spy)
+    logs = tmp_path / "logs"
+    cfg = _cfg(
+        tmp_path,
+        upsert_src,
+        [_orders_spec("orders"), _orders_spec("orders2")],
+        log_dir=str(logs),
+    )
+    res = run(spark, cfg, now=datetime(2026, 8, 13, 12, 0), audit=False)
+    assert [o.status for o in res.outcomes] == ["Completed"] * 4
+    month = logs / "2026-08"
+    for mine, other in (("orders", "orders2"), ("orders2", "orders")):
+        (log_file,) = (month / mine).glob(f"{mine}-*.log")
+        text = log_file.read_text()
+        assert f"write marker for [{mine}]" in text
+        assert f"[{other}]" not in text, f"{mine} log captured {other} records"
+
+
+def test_failed_chain_audits_once_and_other_chain_completes(
+    spark, tmp_path, upsert_src
+):
+    from collections import Counter
+
+    cfg = _cfg(
+        tmp_path,
+        upsert_src,
+        [_orders_spec("orders"), _orders_spec("no_such_orders")],
+    )
+    res = run(spark, cfg, now=datetime(2026, 8, 13, 12, 0))
+    assert [(o.table, o.process, o.status) for o in res.outcomes] == [
+        ("orders", "Copy", "Completed"),
+        ("orders", "Update", "Completed"),
+        ("no_such_orders", "Copy", "Failed"),
+        ("no_such_orders", "Update", "Failed"),
+    ]
+    events = AuditLog(spark, cfg.audit_table_path).events().collect()
+    assert Counter((e.table_name, e.process, e.event) for e in events) == {
+        (table, process, event): 1
+        for table in ("orders", "no_such_orders")
+        for process in ("Copy", "Update")
+        for event in ("start", "finish")
+    }
