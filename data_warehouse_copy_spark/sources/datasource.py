@@ -1300,10 +1300,7 @@ def _table_part_col(t) -> str | None:
     not-yet-existing tables."""
     if not t.exists():
         return None
-    b = t._bounded_ingest_base()
-    if b is not None and b[1] is not None:
-        return b[3]
-    return t.snapshot().partition_date_col
+    return t._head().partition_date_col
 
 
 def _check_writable(m, schema: T.StructType, partition_tagged: bool = False) -> None:
@@ -1532,41 +1529,34 @@ def _commit_staged(
         # An empty OVERWRITE still commits: it is a legitimate truncate.
         return
     with _lock_for(t.root):
-        b = t._bounded_ingest_base()
-        if b is not None and b[1] is not None:
-            # bounded declarative ingest (session-less twin of the native
-            # bounded append/overwrite): header state folds in O(tail)
-            # memory, the commit is an add-only action diff (overwrite:
-            # plus the O(1) remove_all marker), and the streamed
-            # checkpoint cadence works without a SparkSession (pyarrow)
-            head, schema_json, txns, part_col, _cl, _bl, columns, constraints = b
-            _check_writable_fields(
-                part_col, schema_json, schema, staged_part_col == part_col
-            )
-            if txn is not None and txns.get(txn[0], -1) >= txn[1]:
-                return  # retried micro-batch: already committed
-            _enforce_staged_constraints(
-                rootp, staged, constraints, _pm(columns), schema
-            )
-            if op == "overwrite":
-                t._commit_bounded(
-                    head, entries, set(), "overwrite", txn=txn,
-                    remove_all=True,
-                )
-            else:
-                t._commit_bounded(head, entries, set(), "append", txn=txn)
-            return
-        m = t.snapshot()
-        _check_writable(m, schema, staged_part_col == m.partition_date_col)
-        _enforce_staged_constraints(
-            rootp, staged, m.constraints, _pm(m.columns), schema
+        # past the planning gate the header state folds in O(tail)
+        # memory, the commit is an add-only action diff (overwrite: plus
+        # the O(1) remove_all marker), and the streamed checkpoint cadence
+        # works without a SparkSession (pyarrow)
+        head = t._head()
+        _check_writable_fields(
+            head.partition_date_col, head.schema_json, schema,
+            staged_part_col == head.partition_date_col,
         )
-        commit_schema = schema.json() if not m.schema_json else None
-        if op == "overwrite":
-            t._commit_files(m, entries, commit_schema, "overwrite", txn=txn)
-        else:
+        if txn is not None and head.txns.get(txn[0], -1) >= txn[1]:
+            return  # retried micro-batch: already committed
+        _enforce_staged_constraints(
+            rootp, staged, head.constraints, _pm(head.columns), schema
+        )
+        commit_schema = None if head.schema_json else schema.json()
+        if op == "append":
+            t._commit_dml(
+                head, (), (None, {}), entries, "append",
+                schema_json=commit_schema, txn=txn,
+            )
+        elif head.manifest is not None:
             t._commit_files(
-                m, tuple(m.files) + entries, commit_schema, "append", txn=txn
+                head.manifest, entries, commit_schema, "overwrite", txn=txn
+            )
+        else:
+            t._commit_bounded(
+                head.version, entries, set(), "overwrite", txn=txn,
+                remove_all=True,
             )
     # post-commit auto-compaction (opt-in; no-op without a policy) —
     # outside the commit lock, pyarrow-only so this session-less hook
@@ -1793,7 +1783,6 @@ def _commit_replace_where(
     from data_warehouse_copy_spark.sources.managed_table import (
         FileEntry,
         ManagedTable,
-        _file_may_match,
         _lock_for,
     )
 
@@ -1825,7 +1814,7 @@ def _commit_replace_where(
     where_phys = _map_where(where, _phys_map(t._columns_at())) or where
     pred_cols = sorted({c for c, _, _ in where_phys})
 
-    def _staged_satisfy(_schema_json):
+    def _staged_satisfy():
         for e in entries:
             pdf = pq.read_table(
                 str(rootp / e.path), columns=pred_cols
@@ -1839,71 +1828,33 @@ def _commit_replace_where(
                 )
 
     with _lock_for(t.root):
-        b = t._bounded_ingest_base()
-        if b is not None and b[1] is not None:
-            # bounded declarative replaceWhere: candidates come from the
-            # session-less streamed plan (stats+bloom tiers over the
-            # checkpoint, O(batch) memory), the commit is an O(touched)
-            # action diff — no full file list, no SparkSession
-            head, schema_json, _txns, part_col, _cl, _bl, columns, constraints = b
-            _check_writable_fields(
-                part_col, schema_json, schema, staged_part_col == part_col
-            )
-            _enforce_staged_constraints(
-                rootp, staged, constraints, _phys_map(columns), schema
-            )
-            _staged_satisfy(schema_json)
-            planned = t._plan_distributed(
-                head, None, None, None, where, keep_stats=True
-            )
-            if planned is not None:
-                sel = planned[0]
-                per_file, pos_chunks = _harvest_positions(
-                    rootp,
-                    sel,
-                    pred_cols,
-                    lambda tb: _pd_where_mask(tb.to_pandas(), where_phys),
-                )
-                changed: tuple = ()
-                removed: set = set()
-                if per_file:
-                    dv_files = _write_dv_sessionless(rootp, pos_chunks)
-                    changed, removed = ManagedTable._regrow_planned(
-                        sel, dv_files, per_file
-                    )
-                t._commit_bounded(
-                    head, changed + entries, removed, "replace_where"
-                )
-                return
-        m = t.snapshot()
-        _check_writable(m, schema, staged_part_col == m.partition_date_col)
-        _enforce_staged_constraints(
-            rootp, staged, m.constraints, _phys_map(m.columns), schema
+        # past the planning gate candidates come from the session-less
+        # streamed plan (stats+bloom tiers over the checkpoint, O(batch)
+        # memory) and the commit is an O(touched) action diff — no full
+        # file list, no SparkSession
+        head = t._head()
+        _check_writable_fields(
+            head.partition_date_col, head.schema_json, schema,
+            staged_part_col == head.partition_date_col,
         )
-        commit_schema = schema.json() if not m.schema_json else None
-        _staged_satisfy(m.schema_json)
-        candidates = [
-            f
-            for f in m.files
-            if all(
-                _file_may_match(f.stats, c, op, v) for c, op, v in where_phys
-            )
-        ]
-        if m.bloom_cols:
-            from data_warehouse_copy_spark.sources.bloom import bloom_prune
-
-            candidates = bloom_prune(rootp, candidates, where_phys)
+        _enforce_staged_constraints(
+            rootp, staged, head.constraints, _phys_map(head.columns), schema
+        )
+        _staged_satisfy()
+        head, candidates = t._where_candidates(head, where)
         per_file, pos_chunks = _harvest_positions(
             rootp,
             candidates,
             pred_cols,
             lambda tb: _pd_where_mask(tb.to_pandas(), where_phys),
         )
-        files = tuple(m.files)
+        dv = (None, {})
         if per_file:
-            dv_files = _write_dv_sessionless(rootp, pos_chunks)
-            files = ManagedTable._grow_dv(m.files, dv_files, per_file)
-        t._commit_files(m, files + entries, commit_schema, "replace_where")
+            dv = (_write_dv_sessionless(rootp, pos_chunks), per_file)
+        t._commit_dml(
+            head, candidates, dv, entries, "replace_where",
+            schema_json=None if head.schema_json else schema.json(),
+        )
 
 
 def _abort_staged(root: str, messages) -> None:

@@ -64,7 +64,7 @@ import shutil
 import threading
 import uuid
 from collections import defaultdict
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace as _dc_replace
 from datetime import date, datetime, timezone
 from pathlib import Path
@@ -210,6 +210,35 @@ class Manifest:
     def total_rows(self) -> int:
         # effective (post-deletion-vector) rows, kept metadata-only
         return sum(f.rows - f.dv_rows for f in self.files)
+
+
+@dataclass(frozen=True)
+class _TableHead:
+    """The table state a write plans against (:meth:`ManagedTable._head`):
+    the head's version and table-level metadata, plus ``manifest`` — the
+    full snapshot below the distributed-planning gate, ``None`` past it,
+    where the state is folded from the parquet checkpoint header and the
+    action tail in O(tail) driver memory. Every DML plans candidates,
+    scans and commits through this one record; ``manifest`` alone picks
+    the snapshot-diff or the action-diff form of each step."""
+
+    version: int
+    schema_json: str | None
+    txns: dict
+    partition_date_col: str | None
+    cluster_col: str | list | None
+    bloom_cols: list | None
+    columns: list | None
+    constraints: dict | None
+    manifest: Manifest | None = None
+
+    @classmethod
+    def of(cls, m: Manifest) -> "_TableHead":
+        return cls(
+            m.version, m.schema_json, dict(m.txns or {}),
+            m.partition_date_col, m.cluster_col, m.bloom_cols or None,
+            m.columns, m.constraints, m,
+        )
 
 
 @dataclass(frozen=True)
@@ -1414,39 +1443,23 @@ class ManagedTable:
                 return False
             ck, header, actions = base
             touched, adds, wiped = _fold_tail(actions)
-            schema_json = header.get("schema_json")
-            cluster_col = header.get("cluster_col")
-            txns = dict(header.get("txns") or {})
-            columns = header.get("columns")
-            constraints = header.get("constraints")
-            op, ts = header.get("op"), header.get("ts")
-            for raw in actions:
-                if raw.get("schema_json"):
-                    schema_json = raw["schema_json"]
-                if raw.get("columns") is not None:
-                    columns = raw["columns"] or None
-                if raw.get("constraints") is not None:
-                    constraints = raw["constraints"] or None
-                if raw.get("txn"):
-                    txns[str(raw["txn"][0])] = raw["txn"][1]
-                if "cluster_col_change" in raw:
-                    cluster_col = raw["cluster_col_change"][0]
-                op, ts = raw["op"], raw["ts"]
+            h = _fold_header(version, header, actions)
+            last = actions[-1] if actions else header
             new_header = {
                 "version": version,
-                "partition_date_col": header.get("partition_date_col"),
-                "schema_json": schema_json,
-                "op": op,
-                "ts": ts,
-                "cluster_col": cluster_col,
-                "txns": txns or None,
+                "partition_date_col": h.partition_date_col,
+                "schema_json": h.schema_json,
+                "op": last.get("op"),
+                "ts": last.get("ts"),
+                "cluster_col": h.cluster_col,
+                "txns": h.txns or None,
             }
-            if header.get("bloom_cols"):
-                new_header["bloom_cols"] = header["bloom_cols"]
-            if columns:
-                new_header["columns"] = columns
-            if constraints:
-                new_header["constraints"] = constraints
+            if h.bloom_cols:
+                new_header["bloom_cols"] = h.bloom_cols
+            if h.columns:
+                new_header["columns"] = h.columns
+            if h.constraints:
+                new_header["constraints"] = h.constraints
             pq_schema = pa.schema(
                 [
                     ("path", pa.string()),
@@ -1755,19 +1768,11 @@ class ManagedTable:
         if pq.ParquetFile(ck).metadata.num_rows < _DISTRIBUTED_PLAN_MIN_FILES:
             return None
         touched, adds, wiped = _fold_tail(actions)
-        schema_json = header.get("schema_json")
-        bloom_cols = header.get("bloom_cols")
-        columns = header.get("columns")
-        for raw in actions:
-            if raw.get("schema_json"):
-                schema_json = raw["schema_json"]
-            if raw.get("columns") is not None:
-                # explicit [] = mapping cleared (restore to a pre-mapping
-                # version); absent key = inherit
-                columns = raw["columns"] or None
+        head = _fold_header(v, header, actions)
+        schema_json, columns = head.schema_json, head.columns
         root_str = str(self.root)
         where_ser = list(_map_where(where, _phys_map(columns)) or [])
-        use_bloom = bool(where_ser and bloom_cols)
+        use_bloom = bool(where_ser and head.bloom_cols)
         lo, hi, parts = partition_min, partition_max, partitions
         if wiped:
             # bounded overwrite in the tail: every checkpoint row is dead;
@@ -1950,16 +1955,11 @@ class ManagedTable:
         ck, header, actions = base
         if pq.ParquetFile(ck).metadata.num_rows < _DISTRIBUTED_PLAN_MIN_FILES:
             return None
-        schema_json = header.get("schema_json")
-        tbl_columns = header.get("columns")
-        for raw in actions:
-            if raw.get("schema_json"):
-                schema_json = raw["schema_json"]
-            if raw.get("columns") is not None:
-                tbl_columns = raw["columns"] or None
+        head = _fold_header(v, header, actions)
+        schema_json = head.schema_json
         if not schema_json:
             return None
-        mapping = _phys_map(tbl_columns)
+        mapping = _phys_map(head.columns)
         root_str = str(self.root)
         schema = T.StructType.fromJson(json.loads(schema_json))
         if columns is not None:
@@ -2774,51 +2774,31 @@ class ManagedTable:
 
     # ---------------------------------------------------------------- write
 
-    def _bounded_ingest_base(self):
-        """Ingest-side bounded gate: the state an append/overwrite/
-        replace/merge needs — ``(head_version, schema_json, txns,
-        partition_date_col, cluster_col, bloom_cols, columns)`` — folded from the
-        nearest parquet checkpoint header plus the action tail, in
-        O(tail) driver memory, when that checkpoint holds at least
-        ``_DISTRIBUTED_PLAN_MIN_FILES`` entries. ``None`` below the gate
-        (classic snapshot-based path is cheaper there)."""
+    def _head(self) -> _TableHead:
+        """The head state every write plans against. Past the planning
+        gate (the nearest parquet checkpoint holds at least
+        ``_DISTRIBUTED_PLAN_MIN_FILES`` entries and the table has a
+        schema) it is folded from the checkpoint header plus the action
+        tail in O(tail) driver memory, with no manifest; below it, the
+        snapshot (cheaper there) rides along as ``manifest``."""
         import pyarrow.parquet as pq
 
         head = self._head_version()
         base = self._plan_base(head)
-        if base is None:
-            return None
-        ck, header, actions = base
-        if pq.ParquetFile(ck).metadata.num_rows < _DISTRIBUTED_PLAN_MIN_FILES:
-            return None
-        schema_json = header.get("schema_json")
-        cluster_col = header.get("cluster_col")
-        txns = dict(header.get("txns") or {})
-        columns = header.get("columns")
-        constraints = header.get("constraints")
-        for raw in actions:
-            if raw.get("schema_json"):
-                schema_json = raw["schema_json"]
-            if raw.get("columns") is not None:
-                # explicit [] = mapping cleared (restore to a pre-mapping
-                # version); absent key = inherit
-                columns = raw["columns"] or None
-            if raw.get("constraints") is not None:
-                constraints = raw["constraints"] or None
-            if raw.get("txn"):
-                txns[str(raw["txn"][0])] = raw["txn"][1]
-            if "cluster_col_change" in raw:
-                cluster_col = raw["cluster_col_change"][0]
-        return (
-            head,
-            schema_json,
-            txns,
-            header.get("partition_date_col"),
-            cluster_col,
-            header.get("bloom_cols"),
-            columns,
-            constraints,
-        )
+        if base is not None:
+            ck, header, actions = base
+            if pq.ParquetFile(ck).metadata.num_rows >= _DISTRIBUTED_PLAN_MIN_FILES:
+                folded = _fold_header(head, header, actions)
+                if folded.schema_json is not None:
+                    return folded
+        return _TableHead.of(self.snapshot())
+
+    def _snapshot_head(self, head: _TableHead) -> _TableHead:
+        """``head`` with its snapshot materialized — where a bounded
+        planner declines or the operation reads every file."""
+        if head.manifest is not None:
+            return head
+        return _TableHead.of(self.snapshot(head.version))
 
     def _append_with_identity(
         self,
@@ -3070,81 +3050,51 @@ class ManagedTable:
         presents the same epoch and is skipped instead of double-written
         (Delta's txnAppId/txnVersion pattern)."""
         with _lock_for(self.root):
-            b = self._bounded_ingest_base()
-            if b is not None and b[1] is not None:
-                # bounded ingest (the last O(live files) write path, VERDICT
-                # r6 item 1): schema checks run against the folded header
-                # state, the commit is a pure add-action diff, and txn
-                # idempotency re-checks inside the conflict-rebase loop —
-                # the full file list is never materialized
-                head, schema_json, txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-                if txn is not None and txns.get(txn[0], -1) >= txn[1]:
-                    return 0  # retried transaction: already committed
-                id_specs = _identity_specs(schema_json)
-                if id_specs:
-                    return self._append_with_identity(
-                        df, id_specs, merge_schema, txn,
-                        cluster_partitions, copy_sources,
-                        copy_ledger_version,
-                    )
-                df, widened = self._align_append_df(df, schema_json, merge_schema)
-                df = self._enforce_constraints(df, constraints, "append")
-                new_cols = (
-                    _extend_columns(columns, df.schema.json())
-                    if widened
+            # past the planning gate the schema checks run against the
+            # folded header state and the commit is a pure add-action
+            # diff (txn idempotency re-checks inside its rebase loop) —
+            # the full file list is never materialized
+            head = self._head()
+            if txn is not None and head.txns.get(txn[0], -1) >= txn[1]:
+                return 0  # retried transaction: already committed
+            id_specs = _identity_specs(head.schema_json)
+            if id_specs:
+                return self._append_with_identity(
+                    df, id_specs, merge_schema, txn,
+                    cluster_partitions, copy_sources,
+                    copy_ledger_version,
+                )
+            df, widened = self._align_append_df(
+                df, head.schema_json, merge_schema
+            )
+            df = self._enforce_constraints(df, head.constraints, "append")
+            new_cols = (
+                _extend_columns(head.columns, df.schema.json())
+                if widened
+                else None
+            )
+            new_files = self._write_files(
+                df, head.partition_date_col, head.cluster_col,
+                cluster_partitions=cluster_partitions,
+                bloom_cols=head.bloom_cols,
+                columns=new_cols if new_cols is not None else head.columns,
+            )
+            # Only a genuine widen (or first write) updates the manifest
+            # schema; a same-shape append keeps the table's canonical JSON
+            # (the incoming frame's serialization may differ in nullability
+            # only, and drifting the stored text would read as spurious
+            # schema changes to concurrent writers).
+            committed = self._commit_dml(
+                head, (), (None, {}), new_files, "append",
+                schema_json=(
+                    df.schema.json()
+                    if (head.schema_json is None or widened)
                     else None
-                )
-                new_files = self._write_files(
-                    df, part_col, cluster_col,
-                    cluster_partitions=cluster_partitions,
-                    bloom_cols=bloom_cols,
-                    columns=new_cols if new_cols is not None else columns,
-                )
-                committed = self._commit_bounded(
-                    head, new_files, set(), "append", txn=txn,
-                    schema_json=df.schema.json() if widened else None,
-                    columns=new_cols, copy_sources=copy_sources,
-                    copy_ledger_version=copy_ledger_version,
-                )
-                n = sum(f.rows for f in new_files) if committed else 0
-            else:
-                m = self.snapshot()
-                if txn is not None and (m.txns or {}).get(txn[0], -1) >= txn[1]:
-                    return 0  # retried transaction: already committed
-                id_specs = _identity_specs(m.schema_json)
-                if id_specs:
-                    return self._append_with_identity(
-                        df, id_specs, merge_schema, txn,
-                        cluster_partitions, copy_sources,
-                        copy_ledger_version,
-                    )
-                df, widened = self._align_append_df(df, m.schema_json, merge_schema)
-                df = self._enforce_constraints(df, m.constraints, "append")
-                new_cols = (
-                    _extend_columns(m.columns, df.schema.json())
-                    if widened
-                    else None
-                )
-                new_files = self._write_files(
-                    df, m.partition_date_col, m.cluster_col,
-                    cluster_partitions=cluster_partitions,
-                    bloom_cols=m.bloom_cols,
-                    columns=new_cols if new_cols is not None else m.columns,
-                )
-                # Only a genuine widen (or first write) updates the manifest
-                # schema; a same-shape append keeps the table's canonical JSON
-                # (the incoming frame's serialization may differ in nullability
-                # only, and drifting the stored text would read as spurious
-                # schema changes to concurrent writers).
-                commit_schema = (
-                    df.schema.json() if (m.schema_json is None or widened) else None
-                )
-                committed = self._commit_files(
-                    m, tuple(m.files) + new_files, commit_schema, "append",
-                    txn=txn, columns=new_cols, copy_sources=copy_sources,
-                    copy_ledger_version=copy_ledger_version,
-                )
-                n = sum(f.rows for f in new_files) if committed else 0
+                ),
+                txn=txn, columns=new_cols, copy_sources=copy_sources,
+                copy_ledger_version=copy_ledger_version,
+            )
+            n = sum(f.rows for f in new_files) if committed else 0
         if n:
             # post-commit auto-compaction (opt-in; a no-op without a
             # policy): OUTSIDE the append lock — the ingest is already
@@ -3513,22 +3463,15 @@ class ManagedTable:
         base = self._plan_base(v)
         if base is not None:
             _ck, header, actions = base
-            columns = header.get("columns")
-            for raw in actions:
-                if raw.get("columns") is not None:
-                    columns = raw["columns"] or None
-            return columns
+            return _fold_header(v, header, actions).columns
         return self.snapshot(v).columns
 
     def _columns_state(self) -> "tuple[int, str | None, list | None]":
         """``(head_version, schema_json, columns)`` for an evolution
         commit — folded boundedly past the planning gate, via snapshot
         below it (small tables)."""
-        b = self._bounded_ingest_base()
-        if b is not None and b[1] is not None:
-            return b[0], b[1], b[6]
-        m = self.snapshot()
-        return m.version, m.schema_json, m.columns
+        head = self._head()
+        return head.version, head.schema_json, head.columns
 
     def rename_column(self, old: str, new: str) -> None:
         """Rename a column — METADATA-ONLY, at any table size (the Delta
@@ -4169,11 +4112,7 @@ class ManagedTable:
         base = self._plan_base(v)
         if base is not None:
             _ck, header, actions = base
-            constraints = header.get("constraints")
-            for raw in actions:
-                if raw.get("constraints") is not None:
-                    constraints = raw["constraints"] or None
-            return constraints
+            return _fold_header(v, header, actions).constraints
         return self.snapshot(v).constraints
 
     def _constraint_refs(self, name: str) -> "list[str]":
@@ -4229,7 +4168,8 @@ class ManagedTable:
         column's old data can never resurrect into the new column.
         Partition / cluster / bloom columns cannot be dropped."""
         with _lock_for(self.root):
-            head, schema_json, columns = self._columns_state()
+            th = self._head()
+            head, schema_json, columns = th.version, th.schema_json, th.columns
             if not schema_json:
                 raise ValueError("cannot drop a column on an empty table")
             st = T.StructType.fromJson(json.loads(schema_json))
@@ -4247,21 +4187,13 @@ class ManagedTable:
             entry = next(
                 c for c in cols if c["name"] == name and not c.get("dropped")
             )
-            b = self._bounded_ingest_base()
-            if b is not None and b[1] is not None:
-                part_col, cluster_col, bloom_cols = b[3], b[4], b[5]
-            else:
-                m = self.snapshot()
-                part_col, cluster_col, bloom_cols = (
-                    m.partition_date_col, m.cluster_col, m.bloom_cols
-                )
             phys = entry["physical"]
             cluster_list = (
-                [cluster_col] if isinstance(cluster_col, str)
-                else list(cluster_col or [])
+                [th.cluster_col] if isinstance(th.cluster_col, str)
+                else list(th.cluster_col or [])
             )
-            if phys == part_col or phys in cluster_list or phys in (
-                bloom_cols or []
+            if phys == th.partition_date_col or phys in cluster_list or (
+                phys in (th.bloom_cols or [])
             ):
                 raise ValueError(
                     f"cannot drop {name!r}: it is the table's partition, "
@@ -4291,41 +4223,35 @@ class ManagedTable:
         a deterministic layout — e.g. one file per inverted list for an
         IVF index table — instead of AQE's size-based coalescing."""
         with _lock_for(self.root):
-            b = self._bounded_ingest_base()
-            if b is not None:
+            head = self._head()
+            df = self._enforce_constraints(df, head.constraints, "overwrite")
+            new_files = self._write_files(
+                df, head.partition_date_col, head.cluster_col,
+                cluster_partitions=cluster_partitions,
+                bloom_cols=head.bloom_cols,
+                columns=head.columns,
+            )
+            if head.manifest is not None:
+                self._commit_files(
+                    head.manifest, new_files, df.schema.json(), "overwrite"
+                )
+            else:
                 # bounded truncate-and-load: the action records an O(1)
                 # ``remove_all`` marker instead of every removed path —
                 # replay clears state at that action, so even replacing a
                 # 10^6-file table writes a KB-sized commit. Never rebases
                 # (see _commit_bounded): a racer's commit during the
                 # overwrite is a clean rejection, not silent erasure.
-                head, schema_json, _txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-                df = self._enforce_constraints(df, constraints, "overwrite")
-                new_files = self._write_files(
-                    df, part_col, cluster_col,
-                    cluster_partitions=cluster_partitions,
-                    bloom_cols=bloom_cols,
-                    columns=columns,
-                )
                 self._commit_bounded(
-                    head, new_files, set(), "overwrite",
+                    head.version, new_files, set(), "overwrite",
                     schema_json=(
                         df.schema.json()
-                        if _schema_fp(df.schema.json()) != _schema_fp(schema_json)
+                        if _schema_fp(df.schema.json())
+                        != _schema_fp(head.schema_json)
                         else None
                     ),
                     remove_all=True,
                 )
-                return sum(f.rows for f in new_files)
-            m = self.snapshot()
-            df = self._enforce_constraints(df, m.constraints, "overwrite")
-            new_files = self._write_files(
-                df, m.partition_date_col, m.cluster_col,
-                cluster_partitions=cluster_partitions,
-                bloom_cols=m.bloom_cols,
-                columns=m.columns,
-            )
-            self._commit_files(m, new_files, df.schema.json(), "overwrite")
         return sum(f.rows for f in new_files)
 
     def replace_where(
@@ -4352,16 +4278,9 @@ class ManagedTable:
             )
         pred = _where_predicate(where)
         with _lock_for(self.root):
-            b = self._bounded_ingest_base()
-            if b is not None and b[1] is not None:
-                out = self._replace_where_bounded(
-                    df, where, pred, b, validate=validate
-                )
-                if out is not None:
-                    return out
-            m = self.snapshot()
-            if m.schema_json:
-                existing = T.StructType.fromJson(json.loads(m.schema_json))
+            head = self._head()
+            if head.schema_json:
+                existing = T.StructType.fromJson(json.loads(head.schema_json))
                 have, want = set(df.columns), {f.name for f in existing.fields}
                 if have != want:
                     raise ValueError(
@@ -4384,97 +4303,24 @@ class ManagedTable:
                         f"replacement must be confined to the slice it "
                         f"replaces"
                     )
-            df = self._enforce_constraints(df, m.constraints, "replace_where")
-            wp = _map_where(where, _phys_map(m.columns)) or []
-            candidates = [
-                f
-                for f in m.files
-                if all(_file_may_match(f.stats, c, op, v) for c, op, v in wp)
-            ]
-            if m.bloom_cols:
-                from data_warehouse_copy_spark.sources.bloom import bloom_prune
-
-                candidates = bloom_prune(self.root, candidates, wp)
+            df = self._enforce_constraints(df, head.constraints, "replace_where")
+            head, candidates = self._where_candidates(head, where)
             new_files = self._write_files(
-                df, m.partition_date_col, m.cluster_col,
-                bloom_cols=m.bloom_cols,
-                columns=m.columns,
+                df, head.partition_date_col, head.cluster_col,
+                bloom_cols=head.bloom_cols,
+                columns=head.columns,
             )
-            n_ins = sum(f.rows for f in new_files)
-            schema_json = m.schema_json or df.schema.json()
-            if not candidates:
-                self._commit_files(
-                    m, tuple(m.files) + new_files, schema_json, "replace_where",
-                    read_spans=_where_read_spans(where, m.columns),
+            dv = (None, {})
+            if candidates:
+                dv = self._write_dv(
+                    self._scan_with_pos(head, candidates).filter(pred)
                 )
-                return (0, n_ins)
-            hits = self._scan_with_pos(m, candidates).filter(pred)
-            dv_files, per_file = self._write_dv(hits)
-            if dv_files is None:
-                files, n_del = tuple(m.files), 0
-            else:
-                files = self._grow_dv(m.files, dv_files, per_file)
-                n_del = sum(per_file.values())
-            self._commit_files(
-                m, files + new_files, schema_json, "replace_where",
-                read_spans=_where_read_spans(where, m.columns),
+            self._commit_dml(
+                head, candidates, dv, new_files, "replace_where",
+                schema_json=None if head.schema_json else df.schema.json(),
+                read_spans=_where_read_spans(where, head.columns),
             )
-            return (n_del, n_ins)
-
-    def _replace_where_bounded(
-        self, df: DataFrame, where: list[tuple], pred, b,
-        validate: bool = True,
-    ) -> "tuple[int, int] | None":
-        """Bounded DV replace_where: delete-side candidates come from the
-        distributed plan (stats retained), the insert side appends, and
-        the commit is an O(touched) action diff — the full file list is
-        never materialized. ``None`` → caller falls through to classic
-        (the plan gate raced shut)."""
-        head, schema_json, _txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-        existing = T.StructType.fromJson(json.loads(schema_json))
-        have, want = set(df.columns), {f.name for f in existing.fields}
-        if have != want:
-            raise ValueError(
-                f"replace_where schema mismatch: table has "
-                f"{sorted(want)}, dataframe has {sorted(have)}"
-            )
-        df = df.select(*[f.name for f in existing.fields])
-        df = self._enforce_constraints(df, constraints, "replace_where")
-        if validate:
-            n_bad = df.filter(~F.coalesce(pred, F.lit(False))).count()
-            if n_bad:
-                raise ValueError(
-                    f"replace_where: {n_bad} incoming rows do not "
-                    f"satisfy the predicate {where!r} — the replacement "
-                    f"must be confined to the slice it replaces"
-                )
-        planned = self._plan_distributed(
-            head, None, None, None, where, keep_stats=True
-        )
-        if planned is None:
-            return None
-        sel, plan_schema, plan_columns = planned
-        new_files = self._write_files(
-            df, part_col, cluster_col, bloom_cols=bloom_cols,
-            columns=columns,
-        )
-        n_ins = sum(f.rows for f in new_files)
-        if not sel:
-            self._commit_bounded(head, new_files, set(), "replace_where", read_spans=_where_read_spans(where, columns))
-            return (0, n_ins)
-        hits = self._scan_with_pos(
-            None, sel, schema_json=plan_schema
-        ).filter(pred)
-        dv_files, per_file = self._write_dv(hits)
-        if dv_files is None:
-            self._commit_bounded(head, new_files, set(), "replace_where", read_spans=_where_read_spans(where, columns))
-            return (0, n_ins)
-        changed, removed = self._regrow_planned(sel, dv_files, per_file)
-        self._commit_bounded(
-            head, changed + new_files, removed, "replace_where",
-            read_spans=_where_read_spans(where, columns),
-        )
-        return (sum(per_file.values()), n_ins)
+            return (sum(dv[1].values()), sum(f.rows for f in new_files))
 
     def overwrite_range(
         self, df: DataFrame, date_from: str, date_to: str, date_column: str | None = None
@@ -4675,59 +4521,113 @@ class ManagedTable:
                 "use overwrite() to truncate"
             )
         with _lock_for(self.root):
-            # bounded path first (the write-side driver ceiling): past the
-            # planning gate, candidates come from the distributed plan and
-            # the commit is O(touched) — the full file list is never
-            # materialized
-            head = self._head_version()
+            head, candidates = self._where_candidates(self._head(), where)
+            dv = (None, {})
+            if candidates:
+                dv = self._write_dv(
+                    self._scan_with_pos(head, candidates).filter(
+                        _where_predicate(where)
+                    )
+                )
+            if dv[0] is None:
+                self._commit_dml(head, candidates, dv, (), "delete_noop")
+                return 0
+            self._commit_dml(
+                head, candidates, dv, (), "delete",
+                read_spans=_where_read_spans(where, head.columns),
+            )
+            return sum(dv[1].values())
+
+    def _where_candidates(
+        self, head: _TableHead, where: list[tuple]
+    ) -> "tuple[_TableHead, list[FileEntry]]":
+        """Candidate planning by predicate: the files whose stats (and
+        bloom bitmaps) admit a ``where`` match. Past the gate the
+        distributed plan prunes executor-side and keeps stats (the
+        re-versioned entries must keep their pruning power); when it
+        declines, planning falls back to the snapshot here, once. Returns
+        the head the operation goes on with, and its candidates."""
+        if head.manifest is None:
             planned = self._plan_distributed(
-                head, None, None, None, where, keep_stats=True
+                head.version, None, None, None, where, keep_stats=True
             )
             if planned is not None:
-                return self._delete_dv_bounded(head, planned, where)
-            m = self.snapshot()
-            wp = _map_where(where, _phys_map(m.columns)) or []
-            candidates = [
-                f
-                for f in m.files
-                if all(_file_may_match(f.stats, c, op, v) for c, op, v in wp)
-            ]
-            if m.bloom_cols:
-                from data_warehouse_copy_spark.sources.bloom import bloom_prune
+                return head, planned[0]
+            head = self._snapshot_head(head)
+        m = head.manifest
+        wp = _map_where(where, _phys_map(m.columns)) or []
+        candidates = [
+            f
+            for f in m.files
+            if all(_file_may_match(f.stats, c, op, v) for c, op, v in wp)
+        ]
+        if m.bloom_cols:
+            from data_warehouse_copy_spark.sources.bloom import bloom_prune
 
-                # a point delete touches only the files that may hold the
-                # key — bloom-pruned exactly like the read path
-                candidates = bloom_prune(self.root, candidates, wp)
-            if not candidates:
-                self._commit_files(m, tuple(m.files), m.schema_json, "delete_noop")
-                return 0
-            return self._delete_dv(m, candidates, where)
+            # a point DML touches only the files that may hold the key —
+            # bloom-pruned exactly like the read path
+            candidates = bloom_prune(self.root, candidates, wp)
+        return head, candidates
 
-    def _delete_dv_bounded(
-        self, base_version: int, planned: tuple, where: list[tuple]
-    ) -> int:
-        """DV delete with O(touched) driver memory: candidates are the
-        distributed plan's survivors (stats retained — the re-versioned
-        entries must keep their pruning power), the DV write is the
-        normal one pass, and the commit is an action-diff that never
-        constructs the full file list (:meth:`_commit_bounded`)."""
-        sel, schema_json, plan_columns = planned
-        if not sel:
-            self._commit_bounded(base_version, (), set(), "delete_noop")
-            return 0
-        hits = self._scan_with_pos(
-            None, sel, schema_json=schema_json, columns=plan_columns
-        ).filter(_where_predicate(where))
-        dv_files, per_file = self._write_dv(hits)
-        if dv_files is None:
-            self._commit_bounded(base_version, (), set(), "delete_noop")
-            return 0
-        changed, removed = self._regrow_planned(sel, dv_files, per_file)
-        self._commit_bounded(
-            base_version, changed, removed, "delete",
-            read_spans=_where_read_spans(where, plan_columns),
+    def _key_candidates(
+        self, head: _TableHead, keys: DataFrame, key: str
+    ) -> "tuple[_TableHead, list[FileEntry]]":
+        """Candidate planning by key: the files whose ``key`` span admits
+        one of ``keys``. Past the gate the span probe runs over the
+        checkpoint-backed manifest frame (:meth:`_bounded_span_candidates`);
+        when it declines, planning falls back to the snapshot here, once,
+        on the same key frame. Spans the snapshot cannot trust make every
+        file a candidate — scanned for positions, never rewritten."""
+        if head.manifest is None:
+            sel = self._bounded_span_candidates(head, keys, key)
+            if sel is not None:
+                return head, sel
+            head = self._snapshot_head(head)
+        m = head.manifest
+        affected = self._affected_files_by_stats(m, keys, key)
+        if affected is None:
+            return head, list(m.files)
+        return head, [f for f in m.files if f.path in affected]
+
+    def _commit_dml(
+        self,
+        head: _TableHead,
+        candidates: list,
+        dv: tuple,
+        added: tuple,
+        op: str,
+        schema_json: str | None = None,
+        **kw,
+    ) -> bool:
+        """The one DML commit. ``dv = (dv_files, per_file)`` from
+        :meth:`_write_dv` re-versions the ``candidates`` it tombstones
+        (``(None, {})``: nothing tombstoned — a noop, or an insert-only
+        commit), and ``added`` entries land beside them. Below the gate
+        this is the snapshot diff (:meth:`_grow_dv` + :meth:`_commit_files`);
+        past it the O(touched) action diff (:meth:`_regrow_planned` +
+        :meth:`_commit_bounded`). ``schema_json`` is a schema the commit
+        sets (None = inherit); ``kw`` passes through (txn, read_spans,
+        ...). Returns False only for a txn-idempotent skip."""
+        dv_files, per_file = dv
+        if head.manifest is not None:
+            m = head.manifest
+            files = (
+                tuple(m.files)
+                if dv_files is None
+                else self._grow_dv(m.files, dv_files, per_file)
+            )
+            return self._commit_files(
+                m, files + tuple(added), schema_json, op, **kw
+            )
+        changed, removed = (
+            ((), set())
+            if dv_files is None
+            else self._regrow_planned(candidates, dv_files, per_file)
         )
-        return sum(per_file.values())
+        return self._commit_bounded(
+            head.version, changed + tuple(added), removed, op,
+            schema_json=schema_json, **kw,
+        )
 
     @staticmethod
     def _regrow_planned(
@@ -5036,37 +4936,20 @@ class ManagedTable:
             f"commit attempts under contention"
         )
 
-    def _delete_dv(self, m: Manifest, candidates: list, where: list[tuple]) -> int:
-        hits = self._scan_with_pos(m, candidates).filter(_where_predicate(where))
-        dv_files, per_file = self._write_dv(hits)
-        if dv_files is None:
-            self._commit_files(m, tuple(m.files), m.schema_json, "delete_noop")
-            return 0
-        files = self._grow_dv(m.files, dv_files, per_file)
-        self._commit_files(
-            m, files, m.schema_json, "delete",
-            read_spans=_where_read_spans(where, m.columns),
-        )
-        return sum(per_file.values())
-
     def _scan_with_pos(
-        self,
-        m: "Manifest | None",
-        candidates: list,
-        schema_json: str | None = None,
-        columns: list | None = None,
+        self, head: "_TableHead | Manifest", candidates: list
     ) -> DataFrame:
-        """Scan ``candidates`` under the manifest schema with each row's
+        """Scan ``candidates`` under the head's schema with each row's
         ``(__dwcs_uri, __dwcs_pos)`` file coordinates attached and rows
         already deleted by PRIOR deletion vectors subtracted — the ALIVE
-        rows a DML operation may act on. Bounded-commit callers pass
-        ``m=None`` + ``schema_json`` (+ ``columns``, the distributed
-        plan's header state) so no full manifest need exist. The frame
-        returned is LOGICAL: files are read under their physical column
-        names (narrow old types upcast by the parquet reader) and
-        renamed, so every DML caller stays rename/widen-proof."""
-        sj = m.schema_json if m is not None else schema_json
-        pmap = _phys_map(m.columns if m is not None else columns)
+        rows a DML operation may act on. ``head`` is anything carrying
+        ``schema_json`` and ``columns`` (a :class:`_TableHead`, or a
+        snapshot), so no full manifest need exist. The frame returned is
+        LOGICAL: files are read under their physical column names
+        (narrow old types upcast by the parquet reader) and renamed, so
+        every DML caller stays rename/widen-proof."""
+        sj = head.schema_json
+        pmap = _phys_map(head.columns)
         schema = (
             _physical_struct(sj, pmap) if sj else T.StructType([])
         )
@@ -5439,48 +5322,10 @@ class ManagedTable:
             for c, v in set_exprs.items()
         }
         with _lock_for(self.root):
-            # bounded path: same write-side ceiling break as delete()
-            head = self._head_version()
-            planned = self._plan_distributed(
-                head, None, None, None, where, keep_stats=True
-            )
-            if planned is not None:
-                sel, schema_json, plan_columns = planned
-                schema = (
-                    T.StructType.fromJson(json.loads(schema_json))
-                    if schema_json
-                    else T.StructType([])
-                )
-                known = {f.name: f.dataType for f in schema.fields}
-                bad = sorted(set(set_exprs) - set(known))
-                if bad:
-                    raise ValueError(
-                        f"update() assigns unknown columns {bad}; UPDATE "
-                        f"never adds columns (use "
-                        f"append(merge_schema=True))"
-                    )
-                if not sel:
-                    self._commit_bounded(head, (), set(), "update_noop")
-                    return 0
-                _ck, header, actions = self._plan_base(head)
-                cluster_col = header.get("cluster_col")
-                constraints = header.get("constraints")
-                for raw in actions:
-                    if "cluster_col_change" in raw:
-                        cluster_col = raw["cluster_col_change"][0]
-                    if raw.get("constraints") is not None:
-                        constraints = raw["constraints"] or None
-                return self._update_dv_core(
-                    None, head, sel, where, set_exprs, schema, known,
-                    header.get("partition_date_col"), cluster_col,
-                    header.get("bloom_cols"), schema_json=schema_json,
-                    columns=plan_columns,
-                    constraints=constraints,
-                )
-            m = self.snapshot()
+            head = self._head()
             schema = (
-                T.StructType.fromJson(json.loads(m.schema_json))
-                if m.schema_json
+                T.StructType.fromJson(json.loads(head.schema_json))
+                if head.schema_json
                 else T.StructType([])
             )
             known = {f.name: f.dataType for f in schema.fields}
@@ -5490,103 +5335,55 @@ class ManagedTable:
                     f"update() assigns unknown columns {bad}; UPDATE never "
                     f"adds columns (use append(merge_schema=True))"
                 )
-            wp = _map_where(where, _phys_map(m.columns)) or []
-            candidates = [
-                f
-                for f in m.files
-                if all(_file_may_match(f.stats, c, op, v) for c, op, v in wp)
-            ]
-            if m.bloom_cols:
-                from data_warehouse_copy_spark.sources.bloom import bloom_prune
-
-                candidates = bloom_prune(self.root, candidates, wp)
+            head, candidates = self._where_candidates(head, where)
             if not candidates:
-                self._commit_files(m, tuple(m.files), m.schema_json, "update_noop")
+                self._commit_dml(head, candidates, (None, {}), (), "update_noop")
                 return 0
-            return self._update_dv_core(
-                m, None, candidates, where, set_exprs, schema, known,
-                m.partition_date_col, m.cluster_col, m.bloom_cols,
+            hit_rows = self._scan_with_pos(head, candidates).filter(
+                _where_predicate(where)
             )
-
-    def _update_dv_core(
-        self,
-        m: "Manifest | None",
-        base_version: int | None,
-        candidates: list,
-        where: list,
-        set_exprs: dict,
-        schema: "T.StructType",
-        known: dict,
-        part_col: str | None,
-        cluster_col,
-        bloom_cols,
-        schema_json: str | None = None,
-        columns: list | None = None,
-        constraints: dict | None = None,
-    ) -> int:
-        """The DV-update body shared by the classic (full-manifest) and
-        BOUNDED (``m is None``: distributed-plan candidates +
-        :meth:`_commit_bounded` action diff) paths — one implementation,
-        two commit shapes."""
-        hit_rows = self._scan_with_pos(
-            m, candidates, schema_json=schema_json, columns=columns
-        ).filter(_where_predicate(where))
-        # Stage the matched rows ONCE (originals + file coordinates): the
-        # deletion vector, the match count, and the rewrite all derive from
-        # this O(k) stage instead of re-running the candidate scan thrice.
-        commit_id = uuid.uuid4().hex[:16]
-        stage = self.root / "_staging" / f"upd_{commit_id}"
-        hit_rows.repartition(1).write.mode("overwrite").parquet(str(stage))
-        try:
-            staged = self.spark.read.parquet(str(stage))
-            local = self._write_dv_local(stage)
-            if local is not None:
-                dv_files, per_file = local
-            else:
-                dv_files, per_file = self._write_dv(staged)
-            if dv_files is None:
-                if m is not None:
-                    self._commit_files(
-                        m, tuple(m.files), m.schema_json, "update_noop"
-                    )
-                else:
-                    self._commit_bounded(base_version, (), set(), "update_noop")
-                return 0
-            # Every staged row matched, so assignments apply unconditionally;
-            # one select keeps SQL UPDATE's read-the-original-row semantics.
-            assigned = {
-                c: (F.expr(v) if isinstance(v, str) else v).cast(known[c]).alias(c)
-                for c, v in set_exprs.items()
-            }
-            rewritten = staged.select(
-                *[assigned.get(f.name, F.col(f.name)) for f in schema.fields]
-            )
-            rewritten = self._enforce_constraints(
-                rewritten,
-                constraints if m is None else m.constraints,
-                "update",
-            )
-            new_files = self._write_files(
-                rewritten, part_col, cluster_col, bloom_cols=bloom_cols,
-                columns=columns if m is None else m.columns,
-            )
-            if m is not None:
-                files = self._grow_dv(m.files, dv_files, per_file)
-                self._commit_files(
-                    m, files + new_files, m.schema_json, "update",
-                    read_spans=_where_read_spans(where, m.columns),
+            # Stage the matched rows ONCE (originals + file coordinates):
+            # the deletion vector, the match count, and the rewrite all
+            # derive from this O(k) stage instead of re-running the
+            # candidate scan thrice.
+            commit_id = uuid.uuid4().hex[:16]
+            stage = self.root / "_staging" / f"upd_{commit_id}"
+            hit_rows.repartition(1).write.mode("overwrite").parquet(str(stage))
+            try:
+                staged = self.spark.read.parquet(str(stage))
+                dv = self._write_dv_local(stage)
+                if dv is None:
+                    dv = self._write_dv(staged)
+                if dv[0] is None:
+                    self._commit_dml(head, candidates, dv, (), "update_noop")
+                    return 0
+                # Every staged row matched, so assignments apply
+                # unconditionally; one select keeps SQL UPDATE's
+                # read-the-original-row semantics.
+                assigned = {
+                    c: (F.expr(v) if isinstance(v, str) else v)
+                    .cast(known[c])
+                    .alias(c)
+                    for c, v in set_exprs.items()
+                }
+                rewritten = self._enforce_constraints(
+                    staged.select(
+                        *[assigned.get(f.name, F.col(f.name)) for f in schema.fields]
+                    ),
+                    head.constraints,
+                    "update",
                 )
-            else:
-                changed, removed = self._regrow_planned(
-                    candidates, dv_files, per_file
+                new_files = self._write_files(
+                    rewritten, head.partition_date_col, head.cluster_col,
+                    bloom_cols=head.bloom_cols, columns=head.columns,
                 )
-                self._commit_bounded(
-                    base_version, changed + new_files, removed, "update",
-                    read_spans=_where_read_spans(where, columns),
+                self._commit_dml(
+                    head, candidates, dv, new_files, "update",
+                    read_spans=_where_read_spans(where, head.columns),
                 )
-            return sum(per_file.values())
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+                return sum(dv[1].values())
+            finally:
+                shutil.rmtree(stage, ignore_errors=True)
 
     def merge_by_key(self, source_df: DataFrame, primary_key: str) -> int:
         """Delete+reinsert by key as ONE atomic commit — the reference's
@@ -5635,37 +5432,28 @@ class ManagedTable:
                     f"DEFAULT AS IDENTITY column(s) {missing}"
                 )
         with _lock_for(self.root):
-            # Read the head once: the bounded base past the gate, else the
-            # snapshot. The new-row write and the DV plan both build on it.
-            b = self._bounded_ingest_base()
-            if b is None or b[1] is None:
-                b, m = None, self.snapshot()
-                schema_json, constraints = m.schema_json, m.constraints
-                part_col, cluster_col, bloom_cols, columns = (
-                    m.partition_date_col, m.cluster_col, m.bloom_cols,
-                    m.columns,
-                )
-            else:
-                m = None
-                schema_json, constraints = b[1], b[7]
-                part_col, cluster_col, bloom_cols, columns = b[3:7]
+            # Read the head once: the new-row write and the DV plan both
+            # build on it.
+            head = self._head()
             rows = source_df  # a fresh table adopts the source's schema
-            if schema_json:
+            if head.schema_json:
                 cols = [
                     f.name
-                    for f in T.StructType.fromJson(json.loads(schema_json)).fields
+                    for f in T.StructType.fromJson(
+                        json.loads(head.schema_json)
+                    ).fields
                 ]
                 # eager: a violating source raises before anything is written
                 rows = self._enforce_constraints(
-                    source_df.select(*cols), constraints, "merge"
+                    source_df.select(*cols), head.constraints, "merge"
                 )
             # The distinct-key frame feeds THREE separate actions (count,
-            # span probe, position semi-join), in whichever path runs —
-            # and in both when the bounded path declines. Unpersisted, each
-            # re-scans the source and re-runs the distinct shuffle — at
-            # scale that is 3x the source I/O for one merge. Persisting it
-            # is safe where the round-14 in-merge source persist was not:
-            # keys is already pruned to the single key column (nothing for
+            # span probe, position semi-join) — and the probe twice when
+            # the bounded probe declines. Unpersisted, each re-scans the
+            # source and re-runs the distinct shuffle — at scale that is
+            # 3x the source I/O for one merge. Persisting it is safe where
+            # the round-14 in-merge source persist was not: keys is
+            # already pruned to the single key column (nothing for
             # pruning to lose) and its cached runtime size keeps the
             # semi-join's broadcast decision accurate.
             keys = source_df.select(primary_key).distinct().persist()
@@ -5678,18 +5466,36 @@ class ManagedTable:
                 with ThreadPoolExecutor(max_workers=1) as pool:
                     written = pool.submit(
                         contextvars.copy_context().run,
-                        self._write_files, rows, part_col, cluster_col,
-                        bloom_cols=bloom_cols, columns=columns,
+                        self._write_files, rows, head.partition_date_col,
+                        head.cluster_col, bloom_cols=head.bloom_cols,
+                        columns=head.columns,
                     )
                     n_keys = keys.count()
-                    if b is None or not self._merge_dv_bounded(
-                        written, keys, n_keys, primary_key, b
-                    ):
-                        self._merge_dv(
-                            written, keys, n_keys, primary_key,
-                            m if m is not None else self.snapshot(b[0]),
-                            schema_json or source_df.schema.json(),
+                    candidates: list = []
+                    dv = (None, {})
+                    if n_keys:
+                        # Candidate files by key span (works partitioned
+                        # or not — footer stats cover every column)
+                        head, candidates = self._key_candidates(
+                            head, keys, primary_key
                         )
+                    if candidates:
+                        dv = self._write_dv(
+                            self._scan_with_pos(head, candidates).join(
+                                keys, on=primary_key, how="left_semi"
+                            )
+                        )
+                    # An empty source (no keys, no new rows) still
+                    # commits + completes (TableUpdateService.cs:167-172)
+                    self._commit_dml(
+                        head, candidates, dv, written.result(),
+                        "merge" if n_keys else "merge_noop",
+                        schema_json=(
+                            None
+                            if head.schema_json or not n_keys
+                            else source_df.schema.json()
+                        ),
+                    )
             finally:
                 keys.unpersist()
         self._sync_identity_past_source(specs, source_df)
@@ -5709,24 +5515,20 @@ class ManagedTable:
                 self._identity_sync_to(phys.get(col, col), spec, int(mx))
 
     def _bounded_span_candidates(
-        self,
-        head: int,
-        keys: DataFrame,
-        key_name: str,
-        schema: "T.StructType",
-        columns: list | None,
+        self, head: _TableHead, keys: DataFrame, key_name: str
     ) -> "list[FileEntry] | None":
         """Key-span candidate files as a SPARK probe over the
         checkpoint-backed :meth:`manifest_df` — the span frame never
         exists driver-side in Python; only the surviving entries
-        collect. ``None`` → caller falls back to classic planning:
+        collect. ``None`` → the caller plans from the snapshot instead:
         non-integer/string key (float spans exclude NaN — the same
         soundness rule :meth:`_affected_files_by_stats` enforces), a
         file without exact key stats (candidates would be 'every file'
-        and the classic scan owns that shape), or a key name the JSON
+        and the snapshot plan owns that shape), or a key name the JSON
         path can't address."""
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", key_name):
             return None
+        schema = T.StructType.fromJson(json.loads(head.schema_json))
         key_field = next(
             (f for f in schema.fields if f.name == key_name), None
         )
@@ -5740,10 +5542,10 @@ class ManagedTable:
         else:
             return None
         # stats are keyed by the immutable PHYSICAL column name
-        key_phys = (_phys_map(columns) or {}).get(key_name, key_name)
+        key_phys = (_phys_map(head.columns) or {}).get(key_name, key_name)
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", key_phys):
             return None
-        mdf = self.manifest_df(head)
+        mdf = self.manifest_df(head.version)
         lo = F.get_json_object(
             F.col("stats_json"), f"$.{key_phys}[0]"
         ).cast(span_t)
@@ -5789,80 +5591,6 @@ class ManagedTable:
             )
             for r in cand_rows
         ]
-
-    def _merge_dv_bounded(
-        self, written: "Future[tuple[FileEntry, ...]]", keys: DataFrame,
-        n_keys: int, primary_key: str, b,
-    ) -> bool:
-        """Bounded DV merge of the persisted distinct ``keys``: the
-        pk-span candidate probe runs over :meth:`manifest_df`
-        (checkpoint-backed — the span frame never exists driver-side in
-        Python) and the commit is an O(touched) action diff. ``written``
-        is the pending write of the new rows. ``False`` → nothing
-        committed and ``written`` left to the classic fallback:
-        non-integer/string pk (float spans exclude NaN — the same
-        soundness rule :meth:`_affected_files_by_stats` enforces), a file
-        without exact pk stats (candidates would be "every file" and the
-        classic scan owns that shape), or a pk name JSON-path extraction
-        can't address."""
-        head, schema_json, _txns, _part, _cluster, _bloom, columns, _c = b
-        if n_keys == 0:
-            written.result()
-            self._commit_bounded(head, (), set(), "merge_noop")
-            return True
-        schema = T.StructType.fromJson(json.loads(schema_json))
-        sel = self._bounded_span_candidates(
-            head, keys, primary_key, schema, columns
-        )
-        if sel is None:
-            return False
-        changed: tuple = ()
-        removed: set = set()
-        if sel:
-            hits = self._scan_with_pos(
-                None, sel, schema_json=schema_json, columns=columns
-            ).join(keys, on=primary_key, how="left_semi")
-            dv_files, per_file = self._write_dv(hits)
-            if dv_files is not None:
-                changed, removed = self._regrow_planned(
-                    sel, dv_files, per_file
-                )
-        new_files = written.result()
-        self._commit_bounded(head, changed + new_files, removed, "merge")
-        return True
-
-    def _merge_dv(
-        self, written: "Future[tuple[FileEntry, ...]]", keys: DataFrame,
-        n_keys: int, primary_key: str, m: Manifest, schema_json: str,
-    ) -> None:
-        """Classic (full-manifest) DV merge of the persisted distinct
-        ``keys`` over snapshot ``m``; ``written`` is the pending write of
-        the new rows, committed under ``schema_json``."""
-        if n_keys == 0:
-            # Empty key set still commits + completes (TableUpdateService.cs:167-172)
-            written.result()
-            self._commit_files(m, tuple(m.files), m.schema_json, "merge_noop")
-            return
-        # Candidate files by pk span (works partitioned or not — footer
-        # stats cover every column); unusable stats degrade to scanning
-        # every file for POSITIONS, never to a wrong answer, and still
-        # rewrite nothing.
-        affected = self._affected_files_by_stats(m, keys, primary_key)
-        candidates = (
-            list(m.files)
-            if affected is None
-            else [f for f in m.files if f.path in affected]
-        )
-        files = tuple(m.files)
-        if candidates:
-            hits = self._scan_with_pos(m, candidates).join(
-                keys, on=primary_key, how="left_semi"
-            )
-            dv_files, per_file = self._write_dv(hits)
-            if dv_files is not None:
-                files = self._grow_dv(m.files, dv_files, per_file)
-        new_files = written.result()
-        self._commit_files(m, files + new_files, schema_json, "merge")
 
     def merge(
         self,
@@ -6000,8 +5728,8 @@ class ManagedTable:
         skipped = {"updated": 0, "deleted": 0, "inserted": 0,
                    "skipped": True}
         with _lock_for(self.root):
-            b = self._bounded_ingest_base()
-            if txn is not None and b is not None:
+            head = self._head()
+            if txn is not None:
                 # ``txn=(app_id, version)`` makes the merge IDEMPOTENT per
                 # app (the append/overwrite contract extended to MERGE —
                 # what a foreachBatch CDF consumer needs for exactly-once
@@ -6009,32 +5737,15 @@ class ManagedTable:
                 # the table already recorded skips before doing any work;
                 # a CAS race with a concurrent retry is caught again at
                 # commit time (the commit returns False).
-                last = (b[2] or {}).get(str(txn[0]))
+                last = head.txns.get(str(txn[0]))
                 if last is not None and last >= txn[1]:
                     return dict(skipped)
-            if b is not None and b[1] is not None and not by_source_clauses:
-                # bounded expression merge: candidates from the
-                # checkpoint-backed span probe, O(touched) action-diff
-                # commit — the last DML path to get its bounded twin.
-                # (NOT MATCHED BY SOURCE touches every target row by
-                # semantics, so it takes the classic full plan.)
-                out = self._merge_expr_bounded(
-                    source_df, key_cols, matched_clauses,
-                    insert_clauses, b, txn=txn,
-                )
-                if out is not None:
-                    return out
-            m = self.snapshot()
-            if txn is not None:
-                last = (m.txns or {}).get(str(txn[0]))
-                if last is not None and last >= txn[1]:
-                    return dict(skipped)
-            if not m.schema_json:
+            if not head.schema_json:
                 raise ValueError(
                     "merge() requires an existing table schema; use append() "
                     "to create the table first"
                 )
-            schema = T.StructType.fromJson(json.loads(m.schema_json))
+            schema = T.StructType.fromJson(json.loads(head.schema_json))
             known = {f.name: f.dataType for f in schema.fields}
             cols = [f.name for f in schema.fields]
             src_cols = set(source_df.columns)
@@ -6049,46 +5760,40 @@ class ManagedTable:
             )
             _validate_insert_clauses(insert_clauses, known, src_cols, cols)
             id_sync_cols = _merge_identity_gate(
-                _identity_specs(m.schema_json), insert_clauses,
+                _identity_specs(head.schema_json), insert_clauses,
                 matched_clauses + by_source_clauses,
             )
             keys = None
             try:
                 if by_source_clauses:
                     # every target row participates — pruning would silently
-                    # exempt rows in unprobed files from the by-source clauses
-                    candidates = list(m.files)
+                    # exempt rows in unprobed files from the by-source
+                    # clauses, so the merge reads the whole snapshot (the
+                    # operation is O(table) by semantics, not by accident)
+                    head = self._snapshot_head(head)
+                    candidates = list(head.manifest.files)
                     merge_spans = {}  # by-source reads everything (eager)
                 else:
                     # persisted: the key frame feeds the candidate probe AND
-                    # the commit's read-span aggregate — see merge_by_key
+                    # the commit's read-span aggregate — see merge_by_key.
+                    # The probe prunes on the FIRST key column (sound: a
+                    # file whose first-key span admits no source key can't
+                    # hold a match)
                     keys = source_df.select(*key_cols).distinct().persist()
-                    affected = self._affected_files_by_stats(m, keys, key_cols[0])
-                    candidates = (
-                        list(m.files)
-                        if affected is None
-                        else [f for f in m.files if f.path in affected]
+                    head, candidates = self._key_candidates(
+                        head, keys, key_cols[0]
                     )
-                    _k = keys
                     merge_spans = (
-                        lambda k=_k, c=key_cols[0], cl=m.columns:
+                        lambda k=keys, c=key_cols[0], cl=head.columns:
                         self._source_key_spans(k, c, cl)
                     )
                 dv_files, per_file, written, counts = self._merge_core(
-                    m, candidates, source_df, key_cols, schema, known, cols,
-                    matched_clauses, by_source_clauses,
-                    insert_clauses,
-                    m.constraints, m.partition_date_col, m.cluster_col,
-                    m.bloom_cols, m.columns,
+                    head, candidates, source_df, key_cols, schema, known,
+                    cols, matched_clauses, by_source_clauses, insert_clauses,
                 )
                 n_updated, n_deleted, n_inserted = counts
-                files = tuple(m.files)
-                if dv_files is not None:
-                    files = self._grow_dv(files, dv_files, per_file)
-                landed = self._commit_files(
-                    m,
-                    files + written,
-                    m.schema_json,
+                landed = self._commit_dml(
+                    head, candidates, (dv_files, per_file), written,
                     "merge" if any(counts) else "merge_noop",
                     txn=txn,
                     read_spans=merge_spans,
@@ -6102,7 +5807,7 @@ class ManagedTable:
                 # BY DEFAULT identity: the watermark must outrun every
                 # provided id so later ALLOCATIONS never collide
                 self._advance_identity_past_files(
-                    id_sync_cols, written, m.columns
+                    id_sync_cols, written, head.columns
                 )
         return {
             "updated": n_updated,
@@ -6110,107 +5815,20 @@ class ManagedTable:
             "inserted": n_inserted,
         }
 
-    def _merge_expr_bounded(
-        self,
-        source_df: DataFrame,
-        key_cols: list,
-        matched_clauses: list,
-        insert_clauses: list,
-        b,
-        txn: "tuple[str, int] | None" = None,
-    ) -> "dict | None":
-        """Bounded twin of the expression merge: key-span candidates from
-        :meth:`_bounded_span_candidates` (the span frame never exists
-        driver-side), the SAME :meth:`_merge_core` middle, and an
-        O(touched) action-diff commit. ``None`` → classic fallback
-        (multi-column key — the span probe is single-key — or spans the
-        probe can't trust). By-source clauses never reach here (see
-        :meth:`merge` — they are full-table by semantics)."""
-        head, schema_json, _txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-        schema = T.StructType.fromJson(json.loads(schema_json))
-        known = {f.name: f.dataType for f in schema.fields}
-        cols = [f.name for f in schema.fields]
-        src_cols = set(source_df.columns)
-        for k in key_cols:
-            if k not in known or k not in src_cols:
-                raise ValueError(
-                    f"merge key {k!r} must exist on both sides "
-                    f"(target {sorted(known)}, source {sorted(src_cols)})"
-                )
-        _validate_merge_assignments(matched_clauses, known, key_cols)
-        _validate_insert_clauses(insert_clauses, known, src_cols, cols)
-        id_sync_cols = _merge_identity_gate(
-            _identity_specs(schema_json), insert_clauses, matched_clauses
-        )
-        # persisted: feeds the span probe AND the commit's read-span
-        # aggregate — see merge_by_key for the persist rationale
-        keys = source_df.select(*key_cols).distinct().persist()
-        try:
-            # the span probe prunes on the FIRST key column (sound: a file
-            # whose first-key span admits no source key can't hold a match);
-            # a probe miss falls back to the classic full-manifest plan
-            sel = self._bounded_span_candidates(
-                head, keys.select(key_cols[0]).distinct(), key_cols[0],
-                schema, columns,
-            )
-            if sel is None:
-                return None
-            dv_files, per_file, written, counts = self._merge_core(
-                None, sel, source_df, key_cols, schema, known, cols,
-                matched_clauses, [],
-                insert_clauses,
-                constraints, part_col, cluster_col, bloom_cols, columns,
-            )
-            changed: tuple = ()
-            removed: set = set()
-            if dv_files is not None:
-                changed, removed = self._regrow_planned(sel, dv_files, per_file)
-            landed = self._commit_bounded(
-                head, changed + written, removed,
-                "merge" if any(counts) else "merge_noop",
-                txn=txn,
-                read_spans=(
-                    lambda k=keys, c=key_cols[0], cl=columns:
-                    self._source_key_spans(k, c, cl)
-                ),
-            )
-        finally:
-            keys.unpersist()
-        if not landed:
-            return {"updated": 0, "deleted": 0, "inserted": 0,
-                    "skipped": True}
-        if id_sync_cols and written:
-            self._advance_identity_past_files(
-                id_sync_cols, written, columns
-            )
-        return {
-            "updated": counts[0],
-            "deleted": counts[1],
-            "inserted": counts[2],
-        }
-
     def _merge_core(
-        self, m, candidates, source_df, key_cols, schema, known, cols,
+        self, head, candidates, source_df, key_cols, schema, known, cols,
         matched_clauses, by_source_clauses, insert_clauses,
-        constraints, part_col, cluster_col, bloom_cols, columns,
     ) -> "tuple[tuple | None, dict, tuple, tuple]":
-        """The expression-merge MIDDLE, shared by the classic and bounded
-        paths (their difference is candidate planning and commit shape
-        only): first-match-wins clause routing, cardinality guard,
+        """The expression-merge MIDDLE between candidate planning and the
+        commit: first-match-wins clause routing, cardinality guard,
         distinct-position DV write, update/insert frames, constraint
         proof, file write. ``matched_clauses`` / ``by_source_clauses``
         are ordered ``(condition, assignments-or-None)`` lists
         (None = DELETE). Returns ``(dv_files, per_file, written_entries,
         (n_upd, n_del, n_ins))`` — ``dv_files`` None when no target row
-        was acted on. ``m`` is None on the bounded path
-        (``_scan_with_pos`` then plans from the header schema/columns)."""
-        schema_json = schema.json()
+        was acted on."""
         t_scan = (
-            self._scan_with_pos(
-                m, candidates,
-                schema_json=None if m is not None else schema_json,
-                columns=None if m is not None else columns,
-            )
+            self._scan_with_pos(head, candidates)
             if candidates
             else _empty_frame(
                 self.spark,
@@ -6442,13 +6060,13 @@ class ManagedTable:
                 out = frames[0]
                 for fdf in frames[1:]:
                     out = out.unionByName(fdf)
-                out = self._enforce_constraints(out, constraints, "merge")
+                out = self._enforce_constraints(out, head.constraints, "merge")
                 written = self._write_files(
                     out,
-                    part_col,
-                    cluster_col,
-                    bloom_cols=bloom_cols,
-                    columns=columns,
+                    head.partition_date_col,
+                    head.cluster_col,
+                    bloom_cols=head.bloom_cols,
+                    columns=head.columns,
                 )
                 if insert_clauses:
                     # Insert count from the parquet footers _write_files
@@ -6471,10 +6089,11 @@ class ManagedTable:
         """File paths that could hold one of ``keys`` per manifest pk spans.
 
         ``None`` means the spans are unusable (a file without exact pk
-        stats, or mixed stat types) and the caller must fall back to the
-        full rewrite — pruning may only ever narrow, never miss. The probe
-        joins the key set against the broadcast span list (|files| rows,
-        metadata scale); only file PATHS come back to the driver."""
+        stats, or mixed stat types) and every live file becomes a
+        candidate — scanned for deleted POSITIONS, never rewritten;
+        pruning may only ever narrow, never miss. The probe joins the key
+        set against the broadcast span list (|files| rows, metadata
+        scale); only file PATHS come back to the driver."""
         if not m.files:
             return set()
         pk_phys = (_phys_map(m.columns) or {}).get(primary_key, primary_key)
@@ -6490,7 +6109,7 @@ class ManagedTable:
         # Integers only on the numeric path: footer min/max exclude NaN while
         # Spark orders NaN above everything, so a NaN-keyed row would escape
         # every span and the stale row would survive the merge. Float pks
-        # fall back to the full rewrite.
+        # make every file a candidate (a full position scan, no rewrite).
         all_int = all(
             not isinstance(lo, bool) and isinstance(lo, int)
             and not isinstance(hi, bool) and isinstance(hi, int)
@@ -7301,11 +6920,7 @@ class ManagedTable:
         self,
         batch: list,
         policy: dict,
-        schema_json: "str | None",
-        part_col: "str | None",
-        cluster_col,
-        bloom_cols: "list | None",
-        columns: "list | None",
+        head: "_TableHead | Manifest",
     ) -> tuple[FileEntry, ...]:
         """Executor-side merge of one selected batch (round-9 verdict
         item 3): when a SparkSession is available — the native ``append``
@@ -7319,9 +6934,9 @@ class ManagedTable:
         path's driver-byte batch ceiling: selection drops the byte
         budget and the output splits into
         ``ceil(input_bytes / max_file_bytes)`` files instead of one.
-        Table state comes in EXPLICITLY (schema/partition/cluster/bloom/
-        columns) so the past-gate caller can hand its header-folded
-        state without materializing a Manifest. The session-less pyarrow
+        Table state comes in as ``head`` (a snapshot, or the past-gate
+        caller's header-folded :class:`_TableHead`), so no Manifest need
+        materialize. The session-less pyarrow
         merge remains the declarative-hook path; both share
         ``_select_small_batch``."""
         import math
@@ -7329,24 +6944,22 @@ class ManagedTable:
         policy_bytes = policy.get("max_file_bytes", 128 << 20)
         total = sum(self._file_size(f.path) or 0 for f in batch)
         n_out = max(1, math.ceil(total / policy_bytes))
-        df = self._scan_with_pos(
-            None, batch, schema_json=schema_json, columns=columns
-        ).drop("__dwcs_uri", "__dwcs_pos")
-        if cluster_col is not None:
+        df = self._scan_with_pos(head, batch).drop("__dwcs_uri", "__dwcs_pos")
+        if head.cluster_col is not None:
             return self._write_files(
                 df,
-                part_col,
-                cluster_col,
+                head.partition_date_col,
+                head.cluster_col,
                 cluster_partitions=n_out,
-                bloom_cols=bloom_cols,
-                columns=columns,
+                bloom_cols=head.bloom_cols,
+                columns=head.columns,
             )
         return self._write_files(
             df.coalesce(n_out),
-            part_col,
+            head.partition_date_col,
             None,
-            bloom_cols=bloom_cols,
-            columns=columns,
+            bloom_cols=head.bloom_cols,
+            columns=head.columns,
         )
 
     def _merge_small_files(
@@ -7447,11 +7060,11 @@ class ManagedTable:
         self, policy: dict, touched_partitions: "set | None" = None
     ) -> int:
         with _lock_for(self.root):
-            if self._past_planning_gate():
+            m = self._head().manifest
+            if m is None:
                 return self._auto_compact_past_gate(
                     policy, touched_partitions
                 )
-            m = self.snapshot()
             pmap = _phys_map(m.columns) or {}
             cluster_phys = (
                 pmap.get(m.cluster_col, m.cluster_col)
@@ -7486,11 +7099,7 @@ class ManagedTable:
                 if batch is None:
                     continue
                 if self.spark is not None:
-                    out = self._merge_small_files_spark(
-                        batch, policy, m.schema_json,
-                        m.partition_date_col, m.cluster_col,
-                        m.bloom_cols, m.columns,
-                    )
+                    out = self._merge_small_files_spark(batch, policy, m)
                 else:
                     out = (
                         self._merge_small_files(
@@ -7533,17 +7142,9 @@ class ManagedTable:
             return 0
         ck, header, actions = base
         touched, adds, wiped = _fold_tail(actions)
-        columns = header.get("columns")
-        cluster_col = header.get("cluster_col")
-        schema_json = header.get("schema_json")
-        for raw in actions:
-            if raw.get("columns") is not None:
-                columns = raw["columns"] or None
-            if "cluster_col_change" in raw:
-                cluster_col = raw["cluster_col_change"][0]
-            if raw.get("schema_json"):
-                schema_json = raw["schema_json"]
-        pmap = _phys_map(columns) or {}
+        th = _fold_header(head, header, actions)
+        cluster_col = th.cluster_col
+        pmap = _phys_map(th.columns) or {}
         cluster_phys = (
             pmap.get(cluster_col, cluster_col)
             if isinstance(cluster_col, str)
@@ -7551,9 +7152,7 @@ class ManagedTable:
             if cluster_col
             else None
         )
-        bloom_phys = [
-            pmap.get(c, c) for c in (header.get("bloom_cols") or [])
-        ]
+        bloom_phys = [pmap.get(c, c) for c in (th.bloom_cols or [])]
         cap = policy.get("max_merge_files", 128)
         max_bytes = policy.get("max_file_bytes", 128 << 20)
         threshold = policy["max_files_per_partition"]
@@ -7640,7 +7239,7 @@ class ManagedTable:
                     consider(e["path"], part, e.get("dv_paths"))
             if small_count <= threshold:
                 continue
-            use_spark = self.spark is not None and schema_json is not None
+            use_spark = self.spark is not None and th.schema_json is not None
             batch = self._select_small_batch(
                 cand, policy, pre_checked=True, byte_capped=not use_spark
             )
@@ -7650,11 +7249,7 @@ class ManagedTable:
                 # executor-side merge past the gate too (round-10):
                 # _scan_with_pos takes the header-folded state directly,
                 # so no Manifest materializes — the bounded plane holds
-                out = self._merge_small_files_spark(
-                    batch, policy, schema_json,
-                    header.get("partition_date_col"), cluster_col,
-                    header.get("bloom_cols") or None, columns,
-                )
+                out = self._merge_small_files_spark(batch, policy, th)
             else:
                 out = (
                     self._merge_small_files(batch, cluster_phys, bloom_phys),
@@ -7668,8 +7263,7 @@ class ManagedTable:
         return merged_away
 
     def _past_planning_gate(self) -> bool:
-        b = self._bounded_ingest_base()
-        return b is not None and b[1] is not None
+        return self._head().manifest is None
 
     def recluster(
         self,
@@ -8123,6 +7717,35 @@ def _fold_tail(actions: list) -> "tuple[set, dict, bool]":
             touched.add(e["path"])
             adds[e["path"]] = e
     return touched, adds, wiped
+
+
+def _fold_header(version: int, header: dict, actions: list) -> _TableHead:
+    """The table-level state at ``version``: a parquet checkpoint
+    ``header`` with its ordered action ``tail`` replayed on top — the
+    same metadata rules :meth:`ManagedTable._reconstruct` applies, with
+    no file list."""
+    schema_json = header.get("schema_json")
+    txns = dict(header.get("txns") or {})
+    cluster_col = header.get("cluster_col")
+    columns = header.get("columns")
+    constraints = header.get("constraints")
+    for raw in actions:
+        if raw.get("schema_json"):
+            schema_json = raw["schema_json"]
+        if raw.get("columns") is not None:
+            # explicit [] = mapping cleared (restore to a pre-mapping
+            # version); absent key = inherit
+            columns = raw["columns"] or None
+        if raw.get("constraints") is not None:
+            constraints = raw["constraints"] or None
+        if raw.get("txn"):
+            txns[str(raw["txn"][0])] = raw["txn"][1]
+        if "cluster_col_change" in raw:  # 1-elem list; may carry None
+            cluster_col = raw["cluster_col_change"][0]
+    return _TableHead(
+        version, schema_json, txns, header.get("partition_date_col"),
+        cluster_col, header.get("bloom_cols") or None, columns, constraints,
+    )
 
 
 def _entry_dict(f: FileEntry) -> dict:

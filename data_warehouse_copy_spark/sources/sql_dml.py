@@ -4964,19 +4964,11 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
 
         from pyspark.sql import types as T
 
-        head_v = t._head_version()
-        b = t._bounded_ingest_base()
-        if b is not None and b[1] is not None:
-            _h, schema_json, _tx, part_col, cluster_col, bloom, cols, cons = b
-        else:
-            m = t.snapshot()
-            schema_json, part_col, cluster_col = (
-                m.schema_json, m.partition_date_col, m.cluster_col
-            )
-            bloom, cols, cons = m.bloom_cols, m.columns, m.constraints
+        head = t._head()
+        head_v = head.version
         n_cols = (
-            len(T.StructType.fromJson(_json.loads(schema_json)).fields)
-            if schema_json
+            len(T.StructType.fromJson(_json.loads(head.schema_json)).fields)
+            if head.schema_json
             else 0
         )
         detail_schema = T.StructType(
@@ -5009,11 +5001,13 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
             [
                 (
                     str(t.root), head_v, n_files, total, n_cols,
-                    part_col,
-                    _json.dumps(cluster_col) if cluster_col else None,
-                    _json.dumps(bloom) if bloom else None,
-                    bool(cols),
-                    _json.dumps(cons) if cons else None,
+                    head.partition_date_col,
+                    (_json.dumps(head.cluster_col)
+                     if head.cluster_col else None),
+                    _json.dumps(head.bloom_cols) if head.bloom_cols else None,
+                    bool(head.columns),
+                    (_json.dumps(head.constraints)
+                     if head.constraints else None),
                     _json.dumps(policy) if policy else None,
                     t.table_comment(),
                     (_json.dumps(t.generated_columns())

@@ -6,6 +6,7 @@ pruned survivors — planning memory no longer scales with table file count
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import sys
 import uuid
@@ -606,6 +607,33 @@ def test_bounded_count_matches_snapshot(spark, tmp_path, monkeypatch):
     assert t.count() == t.snapshot().total_rows == 1000 + 50 - 10 - len(src_keys)
 
 
+def test_folded_head_matches_snapshot_head(spark, tmp_path, monkeypatch):
+    """The head record folded from the checkpoint header and the action
+    tail (past the gate) equals the snapshot-derived one field by field,
+    across a rename, a new constraint, a clustering-spec change and a
+    txn-stamped append in the tail."""
+    t = _mk(spark, tmp_path / "t")
+    t._write_checkpoint(t.snapshot())
+    t.rename_column("k", "kk")
+    t.add_constraint("v_nonneg", "v >= 0")
+    t.recluster("kk")
+    t.append(
+        spark.range(2000, 2005).selectExpr("id AS kk", "id % 7 AS v"),
+        txn=("app", 7),
+    )
+    monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", 1)
+    folded = t._head()
+    monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", 10**9)
+    snap = t._head()
+    assert folded.manifest is None and snap.manifest is not None
+    assert dataclasses.replace(snap, manifest=None) == folded
+    # every folded field moved off its checkpoint value
+    assert folded.version == t._head_version()
+    assert [c["name"] for c in folded.columns] == ["kk", "v"]
+    assert folded.constraints and folded.cluster_col
+    assert folded.txns == {"app": 7}
+
+
 class TestBoundedIngestCommit:
     """Round-7 item 1: the INGEST commits (append/overwrite/replace_where/
     merge) ride the bounded action-diff path past the gate — the last
@@ -739,10 +767,11 @@ class TestBoundedIngestCommit:
         self, spark, tmp_path, monkeypatch
     ):
         """A DOUBLE key has no sound span probe (NaN), so the bounded
-        merge declines and the classic merge runs on the SAME persisted
-        distinct-key frame — the source is de-duplicated once — and the
-        SAME pending write of the source rows — the source is written
-        once — with the same rows and return value as the classic merge."""
+        probe declines and the key-candidate seam plans from the snapshot
+        on the SAME persisted distinct-key frame — the source is
+        de-duplicated once — and the merge commits the SAME pending write
+        of the source rows — the source is written once — with the same
+        rows and return value as the classic merge."""
 
         def mk(root):
             t = ManagedTable.create(spark, root)
@@ -763,40 +792,116 @@ class TestBoundedIngestCommit:
         monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", 1)
         seen = []
         writes = []
-        bounded, classic = ManagedTable._merge_dv_bounded, ManagedTable._merge_dv
+        written = []
+        committed = []
+        seam = ManagedTable._key_candidates
+        probe = ManagedTable._bounded_span_candidates
+        by_stats = ManagedTable._affected_files_by_stats
         write_files = ManagedTable._write_files
+        commit = ManagedTable._commit_dml
 
-        def spy_bounded(self, written, keys, *rest):
-            seen.append(("bounded", (written, keys)))
-            done = bounded(self, written, keys, *rest)
-            seen.append(("bounded_done", done))
-            return done
+        def spy_seam(self, head, keys, key):
+            seen.append(("seam", keys))
+            return seam(self, head, keys, key)
 
-        def spy_classic(self, written, keys, *rest):
-            seen.append(("classic", (written, keys)))
-            return classic(self, written, keys, *rest)
+        def spy_probe(self, head, keys, key):
+            seen.append(("bounded", keys))
+            sel = probe(self, head, keys, key)
+            seen.append(("bounded_done", sel))
+            return sel
+
+        def spy_stats(self, m, keys, key):
+            seen.append(("classic", keys))
+            return by_stats(self, m, keys, key)
 
         def spy_write(self, *args, **kwargs):
             entries = write_files(self, *args, **kwargs)
             writes.append(sum(e.rows for e in entries))
+            written.append(entries)
             return entries
 
-        monkeypatch.setattr(ManagedTable, "_merge_dv_bounded", spy_bounded)
-        monkeypatch.setattr(ManagedTable, "_merge_dv", spy_classic)
+        def spy_commit(self, head, candidates, dv, added, op, **kwargs):
+            committed.append(added)
+            return commit(self, head, candidates, dv, added, op, **kwargs)
+
+        monkeypatch.setattr(ManagedTable, "_key_candidates", spy_seam)
+        monkeypatch.setattr(ManagedTable, "_bounded_span_candidates", spy_probe)
+        monkeypatch.setattr(ManagedTable, "_affected_files_by_stats", spy_stats)
         monkeypatch.setattr(ManagedTable, "_write_files", spy_write)
+        monkeypatch.setattr(ManagedTable, "_commit_dml", spy_commit)
         nb = b.merge_by_key(src, "k")
         assert na == nb == 20
-        assert [tag for tag, _ in seen] == ["bounded", "bounded_done", "classic"]
-        assert seen[1][1] is False
-        assert seen[0][1][0] is seen[2][1][0]  # one pending write for both
-        assert seen[0][1][1] is seen[2][1][1]  # one key frame for both paths
+        # one trip through the seam: the bounded probe declines and the
+        # snapshot plan runs right there
+        assert [tag for tag, _ in seen] == [
+            "seam", "bounded", "bounded_done", "classic"
+        ]
+        assert seen[2][1] is None
+        assert seen[1][1] is seen[3][1]  # one key frame for both plans
         assert writes == [20]  # the source rows, written by one call
+        assert len(committed) == 1
+        assert committed[0] is written[0]  # one pending write, committed
         assert b.snapshot().op == "merge"
         assert sorted(map(tuple, b.read().collect())) == sorted(
             map(tuple, a.read().collect())
         )
         assert b.read().filter("v = 42").count() == 20
         assert b.count() == 410
+
+    def test_bounded_replace_where_after_rename_matches_classic(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """After a rename, files still carry the old physical name. The
+        bounded replacement must scan its candidates under the head's
+        column mapping, or the predicate sees only NULLs, deletes
+        nothing and the slice ends up duplicated."""
+        a = self._mk(spark, tmp_path / "a")
+        b = self._mk(spark, tmp_path / "b")
+        a.rename_column("k", "kk")
+        b.rename_column("k", "kk")
+        repl = spark.range(0, 20).selectExpr("id AS kk", "CAST(99 AS LONG) v")
+        ra = a.replace_where(repl, [("kk", "<", 20)])  # classic
+        monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", 1)
+        rb = b.replace_where(repl, [("kk", "<", 20)])  # bounded
+        assert ra == rb == (20, 20)
+        assert b.count() == 1000
+        assert sorted(map(tuple, b.read().collect())) == sorted(
+            map(tuple, a.read().collect())
+        )
+
+    @pytest.mark.parametrize("gate", [1, None], ids=["bounded", "classic"])
+    def test_merge_by_key_empty_source_commits_noop(
+        self, spark, tmp_path, monkeypatch, gate
+    ):
+        """An empty source commits ``merge_noop`` on either head, returns
+        0 and joins the pending write of its (zero) rows, which leaves no
+        new directory under ``data/``."""
+        t = self._mk(spark, tmp_path / "t")
+        if gate is not None:
+            monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", gate)
+        assert (t._head().manifest is None) == (gate is not None)
+        write_files = ManagedTable._write_files
+        written = []
+
+        def spy_write(self, *args, **kwargs):
+            entries = write_files(self, *args, **kwargs)
+            written.append(entries)
+            return entries
+
+        monkeypatch.setattr(ManagedTable, "_write_files", spy_write)
+        data_dirs = set((t.root / "data").iterdir())
+        v0 = t._head_version()
+        src = spark.createDataFrame([], "k long, v long")
+        assert t.merge_by_key(src, "k") == 0
+        assert written == [()]  # the pending write ran to completion
+        assert t._head_version() == v0 + 1
+        action = json.loads(
+            (t.root / "_log" / f"{v0 + 1:020d}.json").read_text()
+        )
+        assert action["op"] == "merge_noop"
+        assert action["add"] == [] and action["remove"] == []
+        assert set((t.root / "data").iterdir()) == data_dirs
+        assert t.count() == 1000
 
     def test_streamed_checkpoint_on_bounded_cadence(
         self, spark, tmp_path, monkeypatch
