@@ -65,6 +65,7 @@ import threading
 import uuid
 from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, replace as _dc_replace
 from datetime import date, datetime, timezone
 from pathlib import Path
@@ -297,6 +298,19 @@ _COMMIT_LOCKS_GUARD = threading.Lock()
 def _lock_for(root: Path) -> threading.Lock:
     with _COMMIT_LOCKS_GUARD:
         return _COMMIT_LOCKS[str(root.resolve())]
+
+
+@contextmanager
+def _overlap():
+    """Run one of two independent writes beside the calling thread:
+    yields ``beside(fn, *args, **kwargs)``, which starts ``fn`` on a
+    one-worker pool under a copy of the caller's context variables (the
+    table's logging context rides along) and returns its future. Leaving
+    the block joins the worker, also when either side raised."""
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        yield lambda fn, *args, **kwargs: pool.submit(
+            contextvars.copy_context().run, fn, *args, **kwargs
+        )
 
 
 def _stat_scalar(v):
@@ -1669,7 +1683,8 @@ class ManagedTable:
         base = self._plan_base(version)
         if base is None:
             m = self.snapshot(version)
-            return self.spark.createDataFrame(
+            return _local_frame(
+                self.spark,
                 [
                     (
                         f.path,
@@ -1686,48 +1701,33 @@ class ManagedTable:
             )
         ck, _header, actions = base
         touched, adds, wiped = _fold_tail(actions)
+        adf = _local_frame(
+            self.spark,
+            [
+                (
+                    e["path"],
+                    e.get("partition"),
+                    e["rows"],
+                    json.dumps(e["stats"]) if e.get("stats") else None,
+                    list(e.get("dv_paths") or ()),
+                    e.get("dv_rows", 0),
+                    e.get("bloom_path"),
+                )
+                for e in adds.values()
+            ],
+            self._MANIFEST_ROW_SCHEMA,
+        )
         if wiped:
             # a bounded overwrite truncated the table: live set = the
             # tail's adds alone, checkpoint rows are all dead
-            return self.spark.createDataFrame(
-                [
-                    (
-                        e["path"],
-                        e.get("partition"),
-                        e["rows"],
-                        json.dumps(e["stats"]) if e.get("stats") else None,
-                        list(e.get("dv_paths") or ()),
-                        e.get("dv_rows", 0),
-                        e.get("bloom_path"),
-                    )
-                    for e in adds.values()
-                ],
-                self._MANIFEST_ROW_SCHEMA,
-            )
+            return adf
         mdf = self.spark.read.schema(self._MANIFEST_ROW_SCHEMA).parquet(str(ck))
         if touched:
-            tdf = self.spark.createDataFrame(
-                [(p,) for p in sorted(touched)], "path string"
+            tdf = _local_frame(
+                self.spark, [(p,) for p in sorted(touched)], "path string"
             )
             mdf = mdf.join(F.broadcast(tdf), "path", "left_anti")
-        if adds:
-            adf = self.spark.createDataFrame(
-                [
-                    (
-                        e["path"],
-                        e.get("partition"),
-                        e["rows"],
-                        json.dumps(e["stats"]) if e.get("stats") else None,
-                        list(e.get("dv_paths") or ()),
-                        e.get("dv_rows", 0),
-                        e.get("bloom_path"),
-                    )
-                    for e in adds.values()
-                ],
-                self._MANIFEST_ROW_SCHEMA,
-            )
-            mdf = mdf.unionByName(adf)
-        return mdf
+        return mdf.unionByName(adf) if adds else mdf
 
     def _plan_distributed(
         self,
@@ -1799,8 +1799,8 @@ class ManagedTable:
             )
         mdf = self.spark.read.schema(self._MANIFEST_ROW_SCHEMA).parquet(str(ck))
         if touched:
-            tdf = self.spark.createDataFrame(
-                [(p,) for p in sorted(touched)], "path string"
+            tdf = _local_frame(
+                self.spark, [(p,) for p in sorted(touched)], "path string"
             )
             mdf = mdf.join(F.broadcast(tdf), "path", "left_anti")
         if not where_ser and lo is None and hi is None and parts is None:
@@ -2115,8 +2115,8 @@ class ManagedTable:
             # point probes must not pay 32 empty tasks per probe (24 bloom
             # probes did: a 768-task no-op stage). All-nullable, like
             # the parquet scan's schema when files survive.
-            empty = _empty_frame(
-                self.spark, _nullable(schema or T.StructType([]))
+            empty = _local_frame(
+                self.spark, [], _nullable(schema or T.StructType([]))
             )
             return empty.select(*columns) if columns is not None else empty
         # Read under the MANIFEST schema, not the first file's: after an
@@ -2311,7 +2311,8 @@ class ManagedTable:
             )
             for f in m.files
         ]
-        return self.spark.createDataFrame(
+        return _local_frame(
+            self.spark,
             rows,
             "path string, partition string, rows long, stats_json string, "
             "dv_rows long, bloom_path string",
@@ -2562,7 +2563,7 @@ class ManagedTable:
         )
         if not added:
             # same rationale as read()'s empty path
-            return _empty_frame(self.spark, schema)
+            return _local_frame(self.spark, [], schema)
         # files carry physical names (stable across renames); the cursor
         # consumer sees to_version's logical shape
         pmap = _phys_map(end.columns)
@@ -2766,7 +2767,7 @@ class ManagedTable:
                 )
                 frames.append(tag(logical(gone), pre_t, v))
         if not frames:
-            return _empty_frame(self.spark, out_schema)
+            return _local_frame(self.spark, [], out_schema)
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
@@ -3161,7 +3162,8 @@ class ManagedTable:
                         "a SparkSession to evaluate the constraints"
                     )
                 self._enforce_constraints(
-                    self.spark.createDataFrame(
+                    _local_frame(
+                        self.spark,
                         [tuple(r.get(f.name) for f in schema.fields) for r in rows],
                         schema,
                     ),
@@ -3685,7 +3687,7 @@ class ManagedTable:
             st = T.StructType.fromJson(
                 json.loads(self.snapshot().schema_json or "{}")
             )
-            _empty_frame(self.spark, st).select(F.expr(expr))
+            _local_frame(self.spark, [], st).select(F.expr(expr))
         self._set_field_metadata(name, "default_expression", expr)
 
     def column_defaults(self) -> dict:
@@ -5149,7 +5151,8 @@ class ManagedTable:
             out = self.spark.read.parquet(str(final))
             # URI rendering drifted from the assumption: rebuild file_path
             # driver-side (authoritative) and replace the DV file
-            mapping = self.spark.createDataFrame(
+            mapping = _local_frame(
+                self.spark,
                 [(u, self._uri_to_rel(u)) for u in counts],
                 "file_uri string, file_path string",
             )
@@ -5202,7 +5205,9 @@ class ManagedTable:
         )
         return tuple(f for f in grown if f.dv_rows < f.rows)
 
-    def _augment_generated_updates(self, set_exprs: dict) -> dict:
+    def _augment_generated_updates(
+        self, set_exprs: dict, schema_json: "str | None"
+    ) -> dict:
         """Delta parity for UPDATE over generated columns: an assignment
         that changes a generation expression's SOURCE without assigning
         the generated column itself RECOMPUTES it — two-phase semantics
@@ -5215,10 +5220,9 @@ class ManagedTable:
         the generated column explicitly — never a silent wrong value
         (the gen_<col> CHECK would catch it anyway, but with a worse
         message). Explicit assignments pass through untouched and are
-        validated by that constraint. Schema lookup rides
-        :meth:`_columns_state` (bounded past the planning gate), so a
-        10^6-file table's UPDATE never materializes its manifest here."""
-        _head, schema_json, _cols = self._columns_state()
+        validated by that constraint. ``schema_json`` is the head record's
+        (bounded past the planning gate), so a 10^6-file table's UPDATE
+        never materializes its manifest here."""
         if not schema_json:
             return set_exprs
         gen = {
@@ -5274,26 +5278,22 @@ class ManagedTable:
         return out
 
     def update(self, where: list[tuple], set_exprs: dict) -> int:
-        """See :meth:`_update_impl` — this wrapper adds the identity
-        contract (round-13): assigning a GENERATED ALWAYS AS IDENTITY
-        column is rejected (Delta semantics — the engine owns those
-        values), and an UPDATE that assigns a BY DEFAULT identity
-        column syncs the watermark past the data max afterwards so a
-        raised id can never collide with a later allocation."""
-        specs = _identity_specs(self.snapshot().schema_json)
-        touched = sorted(c for c in (set_exprs or {}) if c in specs)
-        always = [c for c in touched if specs[c].get("always", True)]
-        if always:
-            raise ValueError(
-                f"column(s) {always} are GENERATED ALWAYS AS IDENTITY "
-                f"— UPDATE cannot assign them"
-            )
-        n = self._update_impl(where, set_exprs)
+        """See :meth:`_update_impl`. The identity contract (round-13):
+        assigning a GENERATED ALWAYS AS IDENTITY column is rejected
+        (Delta semantics — the engine owns those values), checked
+        against the head record the update plans against, so past the
+        planning gate no snapshot is built; and an UPDATE that assigns a
+        BY DEFAULT identity column syncs the watermark past the data max
+        afterwards, once the commit lock is released, so a raised id can
+        never collide with a later allocation."""
+        n, touched = self._update_impl(where, set_exprs)
         if n and touched:
             self.sync_identity()
         return n
 
-    def _update_impl(self, where: list[tuple], set_exprs: dict) -> int:
+    def _update_impl(
+        self, where: list[tuple], set_exprs: dict
+    ) -> "tuple[int, list[str]]":
         """Row-level predicate UPDATE as ONE atomic commit (Delta's
         ``UPDATE SET ... WHERE``): rows where the ``where`` conjunction is
         TRUE get each ``set_exprs`` column replaced (value may be a
@@ -5308,21 +5308,31 @@ class ManagedTable:
         UPDATE never evolves the schema (that is
         ``append(merge_schema=True)``'s job) — and values are cast to the
         column's current type so a same-named type drift cannot poison
-        the table."""
+        the table. Returns ``(rows updated, identity columns assigned)``."""
         if not where:
             raise ValueError("update() requires at least one predicate")
         if not set_exprs:
             raise ValueError("update() requires at least one assignment")
-        set_exprs = self._augment_generated_updates(set_exprs)
-        # plain Python scalars are literals (Delta's updateExpr contract:
-        # strings are SQL expressions, Columns pass through, anything
-        # else wraps as a literal value)
-        set_exprs = {
-            c: v if isinstance(v, (Column, str)) else F.lit(v)
-            for c, v in set_exprs.items()
-        }
         with _lock_for(self.root):
             head = self._head()
+            specs = _identity_specs(head.schema_json)
+            touched = sorted(c for c in set_exprs if c in specs)
+            always = [c for c in touched if specs[c].get("always", True)]
+            if always:
+                raise ValueError(
+                    f"column(s) {always} are GENERATED ALWAYS AS IDENTITY "
+                    f"— UPDATE cannot assign them"
+                )
+            set_exprs = self._augment_generated_updates(
+                set_exprs, head.schema_json
+            )
+            # plain Python scalars are literals (Delta's updateExpr
+            # contract: strings are SQL expressions, Columns pass through,
+            # anything else wraps as a literal value)
+            set_exprs = {
+                c: v if isinstance(v, (Column, str)) else F.lit(v)
+                for c, v in set_exprs.items()
+            }
             schema = (
                 T.StructType.fromJson(json.loads(head.schema_json))
                 if head.schema_json
@@ -5338,7 +5348,7 @@ class ManagedTable:
             head, candidates = self._where_candidates(head, where)
             if not candidates:
                 self._commit_dml(head, candidates, (None, {}), (), "update_noop")
-                return 0
+                return 0, touched
             hit_rows = self._scan_with_pos(head, candidates).filter(
                 _where_predicate(where)
             )
@@ -5350,13 +5360,16 @@ class ManagedTable:
             stage = self.root / "_staging" / f"upd_{commit_id}"
             hit_rows.repartition(1).write.mode("overwrite").parquet(str(stage))
             try:
-                staged = self.spark.read.parquet(str(stage))
+                # declared schema: inferring it from the footer ran a job
+                staged = self.spark.read.schema(
+                    _nullable(hit_rows.schema)
+                ).parquet(str(stage))
                 dv = self._write_dv_local(stage)
                 if dv is None:
                     dv = self._write_dv(staged)
                 if dv[0] is None:
                     self._commit_dml(head, candidates, dv, (), "update_noop")
-                    return 0
+                    return 0, touched
                 # Every staged row matched, so assignments apply
                 # unconditionally; one select keeps SQL UPDATE's
                 # read-the-original-row semantics.
@@ -5381,7 +5394,7 @@ class ManagedTable:
                     head, candidates, dv, new_files, "update",
                     read_spans=_where_read_spans(where, head.columns),
                 )
-                return sum(dv[1].values())
+                return sum(dv[1].values()), touched
             finally:
                 shutil.rmtree(stage, ignore_errors=True)
 
@@ -5407,12 +5420,16 @@ class ManagedTable:
         distinct keys merged — matching the reference's metric, which reports
         the *key* count, not the row count (``TableUpdateService.cs:163``).
         """
-        # identity contract (round-13): merge_by_key re-inserts PROVIDED
-        # rows and never allocates — ALWAYS identity tables reject
-        # (their ids are engine-owned), BY DEFAULT sources must carry
-        # the column and the watermark syncs past their max afterwards
-        specs = _identity_specs(self.snapshot().schema_json)
-        if specs:
+        with _lock_for(self.root):
+            # Read the head once: the identity check, the new-row write
+            # and the DV plan all build on it.
+            head = self._head()
+            # identity contract (round-13): merge_by_key re-inserts
+            # PROVIDED rows and never allocates — ALWAYS identity tables
+            # reject (their ids are engine-owned), BY DEFAULT sources must
+            # carry the column and the watermark syncs past their max
+            # afterwards
+            specs = _identity_specs(head.schema_json)
             always = sorted(
                 c for c, sp in specs.items() if sp.get("always", True)
             )
@@ -5423,18 +5440,12 @@ class ManagedTable:
                     f"and never allocates; use BY DEFAULT identity, or "
                     f"a matched-only merge plus append"
                 )
-            missing = sorted(
-                c for c in specs if c not in source_df.columns
-            )
+            missing = sorted(c for c in specs if c not in source_df.columns)
             if missing:
                 raise ValueError(
                     f"merge_by_key source must PROVIDE the GENERATED BY "
                     f"DEFAULT AS IDENTITY column(s) {missing}"
                 )
-        with _lock_for(self.root):
-            # Read the head once: the new-row write and the DV plan both
-            # build on it.
-            head = self._head()
             rows = source_df  # a fresh table adopts the source's schema
             if head.schema_json:
                 cols = [
@@ -5463,9 +5474,8 @@ class ManagedTable:
                 # DV write. Leaving the block joins the writer, also when
                 # either side raised: nothing commits then, and the orphans
                 # are vacuum's, as on any failed write.
-                with ThreadPoolExecutor(max_workers=1) as pool:
-                    written = pool.submit(
-                        contextvars.copy_context().run,
+                with _overlap() as beside:
+                    written = beside(
                         self._write_files, rows, head.partition_date_col,
                         head.cluster_col, bloom_cols=head.bloom_cols,
                         columns=head.columns,
@@ -5638,6 +5648,13 @@ class ManagedTable:
         hitting one target row — fail loudly (Delta's cardinality
         check), never nondeterministically. Returns ``{"updated": n,
         "deleted": n, "inserted": n}``.
+
+        The two writes overlap, as in :meth:`merge_by_key`: once the
+        clause routing and the cardinality guard have run, the deletion
+        vector is written on a worker thread while this thread proves
+        the CHECK constraints and writes the updated and inserted rows;
+        the one commit waits for both. If either side fails, the other
+        is joined and nothing commits.
 
         ``merge_by_key`` remains the whole-row delete+reinsert contract
         (the reference semantics, ``TableUpdateService.cs:81-161``);
@@ -5830,8 +5847,9 @@ class ManagedTable:
         t_scan = (
             self._scan_with_pos(head, candidates)
             if candidates
-            else _empty_frame(
+            else _local_frame(
                 self.spark,
+                [],
                 T.StructType(
                     list(schema.fields)
                     + [
@@ -5883,7 +5901,7 @@ class ManagedTable:
                 # s-side and silently skip the clause — so resolve each
                 # condition against a target-only frame first (analysis
                 # only, no job) to keep the failure loud.
-                bare = _empty_frame(self.spark, schema).alias("t")
+                bare = _local_frame(self.spark, [], schema).alias("t")
                 for cond, _a in by_source_clauses:
                     if cond is None:
                         continue
@@ -6005,79 +6023,89 @@ class ManagedTable:
                                 )
                             ).select(*out_cols)
                         )
-            if pos_frames:
-                dv_files, per_file = self._write_dv(pos_frames[0])
-            if insert_clauses:
-                # FIRST-MATCH-WINS routing over not-matched source rows
-                # (conditions/values see the source as s.<col>). The
-                # anti-join probes the cached join's t-side keys when
-                # available (every candidate target key survives the
-                # left outer; the inner join's keys are target∩source,
-                # sufficient for the anti-join either way) instead of
-                # re-scanning the candidate files.
-                if joined is not None:
-                    probe = joined.select(
-                        *[F.col(f"t.{k}").alias(k) for k in key_cols]
-                    )
-                else:
-                    probe = t_scan.select(*key_cols)
-                nm = (
-                    source_df.alias("s")
-                    .join(probe, on=key_cols, how="left_anti")
-                    .alias("s")
-                )
-                idx = None
-                for i, (cond, _a) in enumerate(insert_clauses):
-                    c = _cond_col(cond)
-                    idx = (
-                        F.when(c, F.lit(i))
-                        if idx is None
-                        else idx.when(c, F.lit(i))
-                    )
-                routed = nm.withColumn("__dwcs_clause", idx).filter(
-                    F.col("__dwcs_clause").isNotNull()
-                )
-                if len(insert_clauses) > 1:
-                    routed = routed.persist()
-                    persisted.append(routed)
-                for i, (_cond, assigns) in enumerate(insert_clauses):
-                    cur = routed.filter(F.col("__dwcs_clause") == i)
-                    if assigns == "*":
-                        ins = cur.select(*cols)
-                    else:
-                        ins = cur.select(
-                            *[
-                                (
-                                    _value_col(assigns[c], c)
-                                    if c in assigns
-                                    else F.lit(None).cast(known[c])
-                                ).alias(c)
-                                for c in cols
-                            ]
-                        )
-                    frames.append(ins)
-            if frames:
-                out = frames[0]
-                for fdf in frames[1:]:
-                    out = out.unionByName(fdf)
-                out = self._enforce_constraints(out, head.constraints, "merge")
-                written = self._write_files(
-                    out,
-                    head.partition_date_col,
-                    head.cluster_col,
-                    bloom_cols=head.bloom_cols,
-                    columns=head.columns,
+            # The DV and the new rows are independent writes: the DV is
+            # written on a worker thread while this thread proves the
+            # constraints and writes the rows. Leaving the block joins the
+            # worker, also when either side raised; nothing commits then.
+            with _overlap() as beside:
+                dv_job = (
+                    beside(self._write_dv, pos_frames[0]) if pos_frames else None
                 )
                 if insert_clauses:
-                    # Insert count from the parquet footers _write_files
-                    # already harvested (zero extra jobs): the written
-                    # frame is update rewrites — exactly n_updated rows,
-                    # since positions are unique wherever an update frame
-                    # exists (cardinality guard / by-source construction)
-                    # — plus the insert rows. An Observation on the insert
-                    # subtree is UNSOUND here: repartitionByRange's range-
-                    # sampling pass re-executes it, doubling the metric.
-                    n_inserted = sum(e.rows for e in written) - n_updated
+                    # FIRST-MATCH-WINS routing over not-matched source rows
+                    # (conditions/values see the source as s.<col>). The
+                    # anti-join probes the cached join's t-side keys when
+                    # available (every candidate target key survives the
+                    # left outer; the inner join's keys are target∩source,
+                    # sufficient for the anti-join either way) instead of
+                    # re-scanning the candidate files.
+                    if joined is not None:
+                        probe = joined.select(
+                            *[F.col(f"t.{k}").alias(k) for k in key_cols]
+                        )
+                    else:
+                        probe = t_scan.select(*key_cols)
+                    nm = (
+                        source_df.alias("s")
+                        .join(probe, on=key_cols, how="left_anti")
+                        .alias("s")
+                    )
+                    idx = None
+                    for i, (cond, _a) in enumerate(insert_clauses):
+                        c = _cond_col(cond)
+                        idx = (
+                            F.when(c, F.lit(i))
+                            if idx is None
+                            else idx.when(c, F.lit(i))
+                        )
+                    routed = nm.withColumn("__dwcs_clause", idx).filter(
+                        F.col("__dwcs_clause").isNotNull()
+                    )
+                    if len(insert_clauses) > 1:
+                        routed = routed.persist()
+                        persisted.append(routed)
+                    for i, (_cond, assigns) in enumerate(insert_clauses):
+                        cur = routed.filter(F.col("__dwcs_clause") == i)
+                        if assigns == "*":
+                            ins = cur.select(*cols)
+                        else:
+                            ins = cur.select(
+                                *[
+                                    (
+                                        _value_col(assigns[c], c)
+                                        if c in assigns
+                                        else F.lit(None).cast(known[c])
+                                    ).alias(c)
+                                    for c in cols
+                                ]
+                            )
+                        frames.append(ins)
+                if frames:
+                    out = frames[0]
+                    for fdf in frames[1:]:
+                        out = out.unionByName(fdf)
+                    out = self._enforce_constraints(
+                        out, head.constraints, "merge"
+                    )
+                    written = self._write_files(
+                        out,
+                        head.partition_date_col,
+                        head.cluster_col,
+                        bloom_cols=head.bloom_cols,
+                        columns=head.columns,
+                    )
+                    if insert_clauses:
+                        # Insert count from the parquet footers _write_files
+                        # already harvested (zero extra jobs): the written
+                        # frame is update rewrites — exactly n_updated rows,
+                        # since positions are unique wherever an update frame
+                        # exists (cardinality guard / by-source construction)
+                        # — plus the insert rows. An Observation on the insert
+                        # subtree is UNSOUND here: repartitionByRange's range-
+                        # sampling pass re-executes it, doubling the metric.
+                        n_inserted = sum(e.rows for e in written) - n_updated
+                if dv_job is not None:
+                    dv_files, per_file = dv_job.result()
         finally:
             for df_ in persisted:
                 df_.unpersist()
@@ -8033,19 +8061,40 @@ def _nullable(schema: T.StructType) -> T.StructType:
     )
 
 
-def _empty_frame(spark: SparkSession, schema: "T.StructType") -> DataFrame:
-    """An empty frame of exactly ``schema`` (nullability included),
-    planned as an empty JVM local relation. ``createDataFrame([], schema)``
-    builds a Python RDD instead, and its first action starts a
-    Python-worker round trip (0.8 s on 4 local cores) to produce no rows;
-    this frame runs no task at all, and Spark's optimizer folds joins and
-    unions over it."""
-    js = spark._jsparkSession
-    return DataFrame(
-        js.createDataFrame(
-            spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json())
+def _local_frame(
+    spark: SparkSession, rows: list, schema: "T.StructType | str"
+) -> DataFrame:
+    """A driver-built frame of ``rows`` with exactly ``schema`` (a
+    ``StructType`` or DDL string; nullability included), planned as a JVM
+    local relation: its actions run no task, and Spark's optimizer folds
+    joins and unions over an empty one. ``createDataFrame(<list>,
+    schema)`` builds a Python RDD instead, and its first action starts a
+    Python-worker job (0.2-0.3 s on 4 local cores for one row, 0.8 s
+    cold). The rows cross to the JVM as one Arrow table; each row goes
+    through ``schema.toInternal`` first, so values read as the list path
+    reads them (a naive datetime is local time)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if not rows:
+        js = spark._jsparkSession
+        return DataFrame(
+            js.createDataFrame(
+                spark._jvm.java.util.ArrayList(),
+                js.parseDataType(schema.json()),
+            ),
+            spark,
+        )
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    columns = zip(*(schema.toInternal(r) for r in rows))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+            schema=arrow,
         ),
-        spark,
+        schema,
     )
 
 

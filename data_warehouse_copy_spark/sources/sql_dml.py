@@ -192,6 +192,9 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from data_warehouse_copy_spark.sources.managed_table import _local_frame
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -2719,7 +2722,8 @@ def _handle_matview_ddl(spark, catalog, sql: str):
         if name not in set(catalog.matview_names()):
             raise SqlDmlError(f"materialized view {name!r} not in catalog")
         res = MaterializedView(spark, catalog, name).refresh()
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [(
                 "REFRESH MATERIALIZED VIEW",
                 int(res["to_version"]),
@@ -2746,7 +2750,8 @@ def _handle_matview_ddl(spark, catalog, sql: str):
                 name, mv.meta["base"], int(mv.meta["cursor"]),
                 int(head), days,
             ))
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             rows,
             T.StructType([
                 T.StructField("name", T.StringType(), False),
@@ -2773,7 +2778,8 @@ def _handle_matview_ddl(spark, catalog, sql: str):
             f"CREATE MATERIALIZED VIEW {name} LOCATION "
             f"'{mv['location']}' {props}AS {mv['sql']}"
         )
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [(ddl,)],
             T.StructType(
                 [T.StructField("createtab_stmt", T.StringType(), False)]
@@ -2790,7 +2796,8 @@ def _handle_matview_ddl(spark, catalog, sql: str):
         name = m.group("name")
         mv = MaterializedView(spark, catalog, name)
         head, days = mv.pending_days()
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [(
                 name, "MATERIALIZED VIEW", mv.meta["sql"],
                 mv.meta["base"], mv.meta["location"],
@@ -2979,7 +2986,8 @@ def _handle_view_ddl(spark, catalog, sql: str):
         return _summary(spark, "DROP VIEW", 0)
     if _SHOW_VIEWS_RE.match(sql) is not None:
         rows = [(n, catalog.view_sql(n)) for n in catalog.view_names()]
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             rows,
             T.StructType(
                 [
@@ -2997,7 +3005,8 @@ def _handle_view_ddl(spark, catalog, sql: str):
         # DESCRIBE DETAIL on a view: metadata-only summary — a view has
         # no files/version of its own, just its stored text and bases
         name = m.group("name")
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [
                 (
                     name,
@@ -3024,7 +3033,8 @@ def _handle_view_ddl(spark, catalog, sql: str):
     )
     if m is not None and m.group("name") in set(catalog.view_names()):
         # views carry no table properties — empty result, not an error
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [],
             T.StructType(
                 [
@@ -3038,7 +3048,8 @@ def _handle_view_ddl(spark, catalog, sql: str):
         name = m.group("name")
         if name in set(catalog.view_names()):
             stmt = f"CREATE OR REPLACE VIEW {name} AS {catalog.view_sql(name)}"
-            return spark.createDataFrame(
+            return _local_frame(
+                spark,
                 [(stmt,)],
                 T.StructType(
                     [T.StructField("createtab_stmt", T.StringType(), False)]
@@ -4390,7 +4401,8 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
         rows = sorted(
             (n, str(catalog.root_of(n))) for n in catalog.names()
         )
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             rows,
             T.StructType(
                 [
@@ -4467,7 +4479,7 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
         # carry constraints, properties and the table comment — an
         # empty table needs no re-validation
         schema = T.StructType.fromJson(json.loads(m.schema_json))
-        nt.append(spark.createDataFrame([], schema))
+        nt.append(_local_frame(spark, [], schema))
         for cname, cexpr in (m.constraints or {}).items():
             nt.add_constraint(cname, cexpr)
         pol = src.auto_compact_policy()
@@ -4620,8 +4632,10 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
         # pin the DECLARED schema with an empty typed append (v1) so
         # constraints/INSERT column lists work before the first data
         nt.append(
-            spark.createDataFrame(
-                [], ", ".join(f"{c[0]} {c[1]}" for c in st.create_columns)
+            _local_frame(
+                spark,
+                [],
+                ", ".join(f"{c[0]} {c[1]}" for c in st.create_columns),
             )
         )
         for n, _ty, cm, _ge, _ex in st.create_columns:
@@ -4646,7 +4660,7 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
                 # schema BEFORE recording anything — a bad expr must not
                 # leave a half-generated table
                 try:
-                    spark.createDataFrame([], nt.read().schema).select(
+                    _local_frame(spark, [], nt.read().schema).select(
                         F.expr(ge)
                     )
                 except Exception as e:
@@ -4708,7 +4722,8 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
             if m.schema_json
             else []
         )
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [(f.name,) for f in fields],
             T.StructType(
                 [T.StructField("col_name", T.StringType(), False)]
@@ -4744,7 +4759,8 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
         lr = t.log_retention_policy()
         if lr is not None:
             rows.append(("logRetention.hours", str(lr)))
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             rows,
             T.StructType(
                 [
@@ -4901,7 +4917,8 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
         if props:
             parts.append("TBLPROPERTIES (" + ", ".join(props) + ")")
         stmt = "\n".join(parts)
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [(stmt,)],
             T.StructType(
                 [T.StructField("createtab_stmt", T.StringType(), False)]
@@ -4950,7 +4967,8 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
             rows.append(("max_col_len", str(cs["max_len"])))
         rows.append(("stats_version", str(stats["version"])))
         rows.append(("stale", str(stats["version"] != t._head_version()).lower()))
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             rows,
             T.StructType(
                 [
@@ -4997,7 +5015,8 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
             else (len(t.snapshot().files), t.count())
         )
         policy = t.auto_compact_policy()
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [
                 (
                     str(t.root), head_v, n_files, total, n_cols,
@@ -5038,7 +5057,8 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
                 T.StructField("rows_removed", T.LongType(), False),
             ]
         )
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [tuple(ci.__dict__.values()) for ci in reversed(rows)],
             hist_schema,
         )
@@ -5224,7 +5244,7 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
                 else T.StructType([])
             )
             n = m.total_rows
-            t.overwrite(spark.createDataFrame([], schema))
+            t.overwrite(_local_frame(spark, [], schema))
         else:
             n = t.delete(st.where)
         return _summary(
@@ -5307,7 +5327,16 @@ def _optimize_scope(t: ManagedTable, where: list) -> set:
     return {f.partition for f in m.files if admit(f.partition)}
 
 
+_SUMMARY_SCHEMA = T.StructType(
+    [
+        T.StructField("operation", T.StringType()),
+        T.StructField("rows_affected", T.LongType()),
+    ]
+)
+
+
 def _summary(spark: SparkSession, op: str, n: int) -> DataFrame:
-    return spark.createDataFrame(
-        [(op, n)], "operation string, rows_affected long"
-    )
+    # The one-row result every DML/DDL statement returns. A JVM local
+    # relation, so the caller's collect() runs no job; a Python-list frame
+    # started a Python-worker job per statement.
+    return _local_frame(spark, [(op, n)], _SUMMARY_SCHEMA)

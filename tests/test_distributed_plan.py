@@ -634,6 +634,51 @@ def test_folded_head_matches_snapshot_head(spark, tmp_path, monkeypatch):
     assert folded.txns == {"app": 7}
 
 
+def test_dml_past_gate_takes_identity_specs_from_head(
+    spark, tmp_path, monkeypatch
+):
+    """Past the gate every DML plans off the folded head record, and the
+    identity check reads its specs there too: no DML call rebuilds the
+    full manifest through snapshot(), and assigning an ALWAYS identity
+    column still raises."""
+    t = _mk(spark, tmp_path / "t")
+    t._write_checkpoint(t.snapshot())
+    ti = _mk(spark, tmp_path / "ti", n=40)
+    ti.set_identity("k")
+    ti._write_checkpoint(ti.snapshot())
+    src = spark.range(990, 1010).selectExpr("id AS k", "id % 7 AS v")
+    monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", 1)
+    calls = []
+    snapshot = ManagedTable.snapshot
+
+    def spy(self, *args, **kwargs):
+        calls.append(self.root)
+        return snapshot(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManagedTable, "snapshot", spy)
+    ops = {
+        "delete": lambda: t.delete(where=[("k", "<", 10)]),
+        "update": lambda: t.update([("k", "<", 20)], {"v": "v + 1"}),
+        "merge_by_key": lambda: t.merge_by_key(src, "k"),
+        "merge": lambda: t.merge(src, "k", when_matched_update={"v": "s.v"}),
+    }
+    counts = {}
+    for name, op in ops.items():
+        calls.clear()
+        op()
+        counts[name] = len(calls)
+    assert counts == {"delete": 0, "update": 0, "merge_by_key": 0, "merge": 0}
+    monkeypatch.setattr(ManagedTable, "snapshot", snapshot)
+    assert t.count() == 1000 - 10 + 10
+
+    version = ti._head_version()
+    with pytest.raises(ValueError, match="GENERATED ALWAYS AS IDENTITY"):
+        ti.update([("k", "<", 5)], {"k": "k + 5000"})
+    with pytest.raises(ValueError, match="GENERATED ALWAYS AS"):
+        ti.merge_by_key(src, "k")
+    assert ti._head_version() == version
+
+
 class TestBoundedIngestCommit:
     """Round-7 item 1: the INGEST commits (append/overwrite/replace_where/
     merge) ride the bounded action-diff path past the gate — the last

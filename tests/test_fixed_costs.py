@@ -1,13 +1,17 @@
-"""Fixed per-action costs on the nightly write path: reads over the
-manifest's file list start no Spark listing job, internal empty frames
-start no Python worker, and a range reload into a fresh window proves
-its empty end-of-day tail from the manifest alone."""
+"""Fixed per-action costs: reads over the manifest's file list start no
+Spark listing job, internal empty frames start no Python worker, a range
+reload into a fresh window proves its empty end-of-day tail from the
+manifest alone, and a SQL statement's one-row result costs no job."""
 
+import json
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_warehouse_copy_spark.sources.managed_table import ManagedTable
+from data_warehouse_copy_spark.sources.names import NamedCatalog
 
 
 def _jobs(spark) -> int:
@@ -85,3 +89,46 @@ def test_overwrite_range_into_fresh_window_starts_no_job_before_write(
     assert {r.k for r in t.read().collect()} == {
         "old", "old_tail", "new", "new_last_day"
     }
+
+
+@pytest.mark.parametrize(
+    "stmt, expected",
+    [
+        ("INSERT INTO db.t VALUES (100, 1)", ("INSERT", 1)),
+        ("UPDATE db.t SET v = v + 1 WHERE k < 5", ("UPDATE", 5)),
+        ("DELETE FROM db.t WHERE k >= 18", ("DELETE", 2)),
+        (
+            "MERGE INTO db.t t USING db.s s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = s.v "
+            "WHEN NOT MATCHED THEN INSERT *",
+            ("MERGE", 10),
+        ),
+        ("TRUNCATE TABLE db.t", ("TRUNCATE", 20)),
+    ],
+    ids=["insert", "update", "delete", "merge", "truncate"],
+)
+def test_sql_dml_result_collects_without_a_job(spark, tmp_path, stmt, expected):
+    """The (operation, rows_affected) row is a JVM local relation: a
+    Python-list frame started a 4-task Python-worker job per statement."""
+    c = NamedCatalog(tmp_path / "catalog.json")
+    for name, src in (
+        ("t", spark.range(0, 20).selectExpr("id AS k", "id % 5 AS v")),
+        ("s", spark.range(15, 25).selectExpr("id AS k", "100L AS v")),
+    ):
+        ManagedTable.create(spark, tmp_path / name).append(src.coalesce(1))
+        c.register(f"db.{name}", tmp_path / name)
+
+    df = c.sql(spark, stmt)
+    assert "PythonRDD" not in _lineage(df)
+    before = _jobs(spark)
+    rows = df.collect()
+    assert _jobs(spark) == before
+    summary = T.StructType(
+        [
+            T.StructField("operation", T.StringType(), True),
+            T.StructField("rows_affected", T.LongType(), True),
+        ]
+    )
+    assert df.schema == summary
+    assert T.StructType.fromJson(json.loads(df._jdf.schema().json())) == summary
+    assert [tuple(r) for r in rows] == [expected]
