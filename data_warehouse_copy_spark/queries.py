@@ -3927,7 +3927,10 @@ def text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie boundary is identical cross-engine.
 
     100 TB shape: explode + count is one map-side-combined shuffle keyed
-    on token; the top-k window runs over |vocab| rows, not |corpus|."""
+    on token; the top 50 by the same total order are taken per partition
+    first (``orderBy().limit()``: TakeOrderedAndProject), so the global
+    numbering window sees 50 rows, never the whole vocabulary on one
+    partition."""
     (docs,) = _prep(spark, sf_dir, "documents")
     toks = _spread(docs).select(
         F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("token"),
@@ -3940,10 +3943,11 @@ def text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_occurrences"),
         F.count_distinct("doc_id").alias("n_docs"),
     )
-    w = Window.orderBy(F.col("n_occurrences").desc(), F.col("token").asc())
+    order = [F.col("n_occurrences").desc(), F.col("token").asc()]
     return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 50)
+        counts.orderBy(*order)
+        .limit(50)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
         .select("rank", "token", "n_occurrences", "n_docs")
     )
 

@@ -2146,36 +2146,38 @@ class ManagedTable:
             df = df.select(*columns)
         return df
 
-    def _canonicalize_uri(self, uri: "F.Column") -> "F.Column":
-        """A file URI mapped to this handle's CANONICAL path key,
-        executor-side with pure codegen expressions: strip the ``file:``
-        scheme, percent-decode Hadoop's URI encoding (only when an escape
-        is present, so literal ``+`` in clean paths survives
-        ``url_decode``'s form semantics), then strip THIS handle's root
-        prefix — in-root files yield their relative manifest path,
-        shallow-clone references (absolute, outside the root) pass
-        through as the absolute path the clone manifest keys them by."""
-        decoded = F.when(uri.contains("%"), F.url_decode(uri)).otherwise(uri)
-        path = F.when(
-            decoded.startswith("file:"), decoded.substr(F.lit(6), F.lit(1 << 30))
-        ).otherwise(decoded)
+    def _canonicalize_uri(self, uri: str) -> str:
+        """SQL text mapping the file URI in SQL expression ``uri`` to
+        this handle's CANONICAL path key, executor-side with pure codegen
+        expressions: strip the ``file:`` scheme, percent-decode Hadoop's
+        URI encoding (only when an escape is present, so literal ``+`` in
+        clean paths survives ``url_decode``'s form semantics), then strip
+        THIS handle's root prefix — in-root files yield their relative
+        manifest path, shallow-clone references (absolute, outside the
+        root) pass through as the absolute path the clone manifest keys
+        them by. Keying DV joins on it instead of the raw URI makes reads
+        agree across HANDLE RENDERINGS: a DV written through a symlinked
+        root and a scan through the real root render different URIs but
+        the same canonical path. :func:`_canonical_key` is the
+        driver-side twin."""
         prefix = os.path.abspath(str(self.root)) + "/"
-        return F.when(
-            path.startswith(prefix),
-            path.substr(F.lit(len(prefix) + 1), F.lit(1 << 30)),
-        ).otherwise(path)
-
-    def _canonical_path_col(self) -> "F.Column":
-        """The scan row's canonical path key (see
-        :meth:`_canonicalize_uri`). Joining DVs on this key instead of
-        the raw URI makes reads agree across HANDLE RENDERINGS: a DV
-        written through a symlinked root and a scan through the real
-        root render different URIs but the same canonical path."""
-        return self._canonicalize_uri(F.col("_metadata.file_path"))
+        decoded = (
+            f"CASE WHEN contains({uri}, '%') THEN url_decode({uri}) "
+            f"ELSE {uri} END"
+        )
+        path = (
+            f"CASE WHEN startswith({decoded}, 'file:') "
+            f"THEN substr({decoded}, 6) ELSE {decoded} END"
+        )
+        return (
+            f"CASE WHEN startswith({path}, {_sql_string(prefix)}) "
+            f"THEN substr({path}, {len(prefix) + 1}) ELSE {path} END"
+        )
 
     def _dv_frame(self, dv_paths: list) -> DataFrame:
-        """The union of ``dv_paths``'s position rows keyed for the DV
-        anti-join — under BOTH keyings a position may be known by:
+        """The deleted positions of ``dv_paths`` as ``(__dwcs_dv_rel,
+        __dwcs_dv_pos)`` rows for :meth:`_dv_join`, under BOTH keyings a
+        position may be known by:
 
         - its stored ``file_path`` (canonical for the WRITING handle:
           table-relative normally, source-absolute for a clone-local DV
@@ -2186,66 +2188,164 @@ class ManagedTable:
           ``file_path`` source-relative, but the URI's absolute path is
           exactly how the clone manifest keys the file).
 
-        The right side of a ``left_anti`` join tolerates duplicate keys,
-        so rows matched by both keyings cost nothing; the frame stays
-        O(2k) for k deleted positions.
+        Anti and semi joins tolerate duplicate right-side keys, so a
+        position both keyings name costs nothing.
 
-        The DV schema is FIXED by both writers (``_write_dv`` and the
-        session-less pyarrow twin): declaring it here skips parquet
-        schema inference — a per-call footer-open round trip that every
-        DV-bearing read, delete, merge and CDF plan was paying (round-15;
-        on an object store that inference is a remote GET per plan).
-        A declared column a file lacks reads as NULL, and a NULL key
-        would let the anti-join bring deleted rows back, so a NULL
-        ``file_path`` or ``pos`` raises inside the scan instead — no
-        extra job, no footer read."""
+        Two ways to build it, chosen by the size Spark would broadcast:
+
+        - **Local.** When the DV bytes the footers declare are at most
+          the session's ``spark.sql.autoBroadcastJoinThreshold`` — the
+          side Spark would broadcast anyway — the driver reads the DV
+          parquets with pyarrow and hands the rows to the JVM as one
+          Arrow local relation (:func:`_local_frame`). No job scans the
+          DV parquets only for Spark to collect them back for the
+          broadcast, and a URI keying that equals ``file_path`` (the
+          usual case) crosses once, not twice.
+        - **Scan.** Otherwise — a threshold of 0 or less, a DV set over
+          it, a DV file whose footer schema is not the fixed DV schema,
+          one that holds a NULL, or one the driver cannot open — a Spark
+          scan under the DV schema both writers fix (``_write_dv`` and
+          the session-less pyarrow twin): declaring it skips Spark's
+          parquet schema inference. A declared column a file lacks
+          reads as NULL, and a NULL key would let the anti-join bring
+          deleted rows back, so a NULL ``file_path`` or ``pos`` raises
+          inside the scan instead, with no extra job."""
+        local = self._dv_rows_local(dv_paths)
+        if local is not None:
+            return _local_frame(
+                self.spark,
+                local,
+                T.StructType(
+                    [
+                        T.StructField("__dwcs_dv_rel", T.StringType()),
+                        T.StructField("__dwcs_dv_pos", T.LongType()),
+                    ]
+                ),
+            )
         raw = self.spark.read.schema(
             "file_uri string, file_path string, pos long"
         ).parquet(*[str(self.root / p) for p in dv_paths])
 
-        def key(c: str) -> "F.Column":
-            return F.when(
-                F.col(c).isNull(),
-                F.raise_error(
-                    F.lit(
-                        f"deletion vector row with NULL {c} in table "
-                        f"{self.root}: DV parquet schema drifted"
-                    )
-                ),
-            ).otherwise(F.col(c))
+        def key(c: str) -> str:
+            msg = (
+                f"deletion vector row with NULL {c} in table "
+                f"{self.root}: DV parquet schema drifted"
+            )
+            return (
+                f"CASE WHEN {c} IS NULL THEN raise_error({_sql_string(msg)}) "
+                f"ELSE {c} END"
+            )
 
-        pos = key("pos").alias("__dwcs_dv_pos")
-        return raw.select(
-            key("file_path").alias("__dwcs_dv_rel"), pos
+        pos = f"{key('pos')} AS __dwcs_dv_pos"
+        return raw.selectExpr(
+            f"{key('file_path')} AS __dwcs_dv_rel", pos
         ).unionAll(
-            raw.select(
-                self._canonicalize_uri(F.col("file_uri")).alias("__dwcs_dv_rel"),
-                pos,
+            raw.selectExpr(
+                f"{self._canonicalize_uri('file_uri')} AS __dwcs_dv_rel", pos
             )
         )
 
-    def _apply_dv(self, df: DataFrame, sel: list) -> DataFrame:
-        """Subtract deletion-vectored rows from a scan over ``sel``'s files:
-        one anti-join on ``(canonical file path, _metadata.row_index)``
-        against the union of the selected files' DV parquets (see
-        :meth:`_canonical_path_col` for why the join keys on the manifest
-        path, not the raw URI). DV-free scans return ``df`` untouched —
-        the hot path pays nothing. The DV side is tiny relative to the
-        data (k deleted rows); AQE broadcasts it when it fits, and a giant
-        DV set degrades to a shuffled anti-join, never an error."""
-        dv_paths = sorted({p for f in sel for p in f.dv_paths})
+    def _dv_rows_local(self, dv_paths: list) -> "pa.Table | None":
+        """The local side of :meth:`_dv_frame` — ``(__dwcs_dv_rel,
+        __dwcs_dv_pos)`` rows read on the driver — or ``None`` when the
+        scan side must serve: Spark's broadcast threshold is off (0 or
+        less) or below the DV bytes the footers declare, or some DV file
+        cannot be opened, departs from the fixed DV schema, holds a
+        NULL, or carries a URI :func:`_canonical_key` cannot key exactly
+        as Spark would. The scan then raises or keys as it always has."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        limit = (
+            self.spark._jsparkSession.sessionState()
+            .conf()
+            .autoBroadcastJoinThreshold()
+        )
+        if limit <= 0:
+            return None
+        want = pa.schema(
+            [("file_uri", pa.string()), ("file_path", pa.string()),
+             ("pos", pa.int64())]
+        )
+        opened = []
+        try:
+            for p in dv_paths:
+                opened.append(pq.ParquetFile(str(self.root / p)))
+            md = [f.metadata for f in opened]
+            if any(
+                {c.name: c.type for c in f.schema_arrow}
+                != {c.name: c.type for c in want}
+                for f in opened
+            ) or sum(
+                m.row_group(i).total_byte_size
+                for m in md
+                for i in range(m.num_row_groups)
+            ) > limit:
+                return None
+            # Spark's writer marks the columns NOT NULL, pyarrow's not
+            tbl = pa.concat_tables(
+                [f.read(columns=want.names).cast(want) for f in opened]
+            )
+        except (OSError, pa.ArrowException):
+            return None
+        finally:
+            for f in opened:
+                f.close()
+        if any(c.null_count for c in tbl.columns):
+            return None
+        prefix = os.path.abspath(str(self.root)) + "/"
+        uris = tbl.column("file_uri")
+        distinct = pc.unique(uris)
+        keys = [_canonical_key(u, prefix) for u in distinct.to_pylist()]
+        if None in keys:
+            return None
+        by_uri = pc.take(
+            pa.array(keys, pa.string()), pc.index_in(uris, value_set=distinct)
+        )
+        rel, pos = tbl.column("file_path"), tbl.column("pos")
+        return pa.concat_tables(
+            [
+                pa.table({"__dwcs_dv_rel": rel, "__dwcs_dv_pos": pos}),
+                # the URI keying only where it names another key
+                pa.table({"__dwcs_dv_rel": by_uri, "__dwcs_dv_pos": pos})
+                .filter(pc.not_equal(by_uri, rel)),
+            ]
+        )
+
+    def _dv_join(self, df: DataFrame, dv_paths, how: str) -> DataFrame:
+        """Join the scan ``df`` (its rows still carry ``_metadata``) with
+        the positions ``dv_paths`` delete, on ``(canonical file path,
+        _metadata.row_index)``: ``left_anti`` keeps the live rows (reads
+        and DML scans), ``left_semi`` the deleted ones (the change
+        feed). The condition is one SQL-text expression, the canonical
+        path key (:meth:`_canonicalize_uri`) included, in one equi-join
+        against :meth:`_dv_frame`: no projection adds or drops helper
+        columns, and the whole plan costs a few py4j round trips where
+        the same expressions built through the Column API took hundreds.
+        With no DV paths ``df`` comes back untouched — the hot path pays
+        nothing. The DV side is tiny relative to the data (k deleted
+        rows): a local relation when it is under the broadcast
+        threshold, otherwise a scan AQE broadcasts when it fits, and a
+        giant DV set degrades to a shuffled join, never an error."""
         if not dv_paths:
             return df
-        return (
-            df.withColumn("__dwcs_rel", self._canonical_path_col())
-            .withColumn("__dwcs_pos", F.col("_metadata.row_index"))
-            .join(
-                self._dv_frame(dv_paths),
-                (F.col("__dwcs_rel") == F.col("__dwcs_dv_rel"))
-                & (F.col("__dwcs_pos") == F.col("__dwcs_dv_pos")),
-                "left_anti",
-            )
-            .drop("__dwcs_rel", "__dwcs_pos")
+        rel = self._canonicalize_uri("_metadata.file_path")
+        return df.join(
+            self._dv_frame(dv_paths),
+            F.expr(
+                f"{rel} = __dwcs_dv_rel "
+                "AND _metadata.row_index = __dwcs_dv_pos"
+            ),
+            how,
+        )
+
+    def _apply_dv(self, df: DataFrame, sel: list) -> DataFrame:
+        """Subtract deletion-vectored rows from a scan over ``sel``'s
+        files: :meth:`_dv_join`'s anti-join against the union of the
+        selected files' DV parquets. DV-free selections return ``df``
+        untouched."""
+        return self._dv_join(
+            df, sorted({p for f in sel for p in f.dv_paths}), "left_anti"
         )
 
     def count(self) -> int:
@@ -2737,18 +2837,13 @@ class ManagedTable:
                     )
                 )
             if new_dvs:
-                scan = (
+                # semi: dual-keyed DV rows never duplicate a data row
+                dead = self._dv_join(
                     reader.parquet(
                         *[str(self.root / e["path"]) for e in affected]
-                    )
-                    .withColumn("__dwcs_rel", self._canonical_path_col())
-                    .withColumn("__dwcs_pos", F.col("_metadata.row_index"))
-                )
-                dead = scan.join(
-                    self._dv_frame(new_dvs),
-                    (F.col("__dwcs_rel") == F.col("__dwcs_dv_rel"))
-                    & (F.col("__dwcs_pos") == F.col("__dwcs_dv_pos")),
-                    "left_semi",  # semi: dual-keyed DV rows never duplicate
+                    ),
+                    new_dvs,
+                    "left_semi",
                 )
                 frames.append(tag(logical(dead), pre_t, v))
             if removed_prior:
@@ -3790,20 +3885,18 @@ class ManagedTable:
         return out
 
     def _advance_identity_past_files(
-        self, cols: list, files, columns
+        self, specs: dict, files, columns
     ) -> None:
-        """Sync each BY DEFAULT identity watermark past the maxima the
-        freshly-written files carry (footer stats, PHYSICAL-keyed — no
-        extra scan job) so later allocations never collide with
-        user-provided ids: Delta's SYNC IDENTITY fold, applied
-        automatically at merge commit. A lost CAS just re-reads — a
-        racer can only have moved the watermark FORWARD."""
-        specs = self.identity_columns()
+        """Sync the watermark of each BY DEFAULT identity column in
+        ``specs`` (``{column: spec}``, taken from the head the DML
+        planned against) past the maxima the freshly-written ``files``
+        carry (footer stats, PHYSICAL-keyed through ``columns``) so later
+        allocations never collide with user-provided ids: Delta's SYNC
+        IDENTITY fold, applied automatically at DML commit with no
+        snapshot and no scan job. A lost CAS just re-reads — a racer can
+        only have moved the watermark FORWARD."""
         phys = _phys_map(columns) or {}
-        for col in cols:
-            spec = specs.get(col)
-            if spec is None:
-                continue
+        for col, spec in specs.items():
             pcol = phys.get(col, col)
             maxima = [
                 f.stats[pcol][1]
@@ -4956,34 +5049,22 @@ class ManagedTable:
             _physical_struct(sj, pmap) if sj else T.StructType([])
         )
         reader = self.spark.read.schema(schema) if sj else self.spark.read
-        df = (
-            reader.parquet(*[str(self.root / f.path) for f in candidates])
-            .withColumn("__dwcs_uri", F.col("_metadata.file_path"))
-            .withColumn("__dwcs_pos", F.col("_metadata.row_index"))
+        df = reader.parquet(
+            *[str(self.root / f.path) for f in candidates]
+        ).selectExpr(
+            "*",
+            "_metadata.file_path AS __dwcs_uri",
+            "_metadata.row_index AS __dwcs_pos",
         )
         if pmap:
             df = _project_rename(df, {p: l for l, p in pmap.items()})
-        dv_paths = sorted({p for f in candidates for p in f.dv_paths})
-        if dv_paths:
-            # canonical-path keys, same as _apply_dv — a prior DV written
-            # through a different root rendering (symlink) still matches
-            df = (
-                df.withColumn("__dwcs_rel", self._canonical_path_col())
-                .join(
-                    self._dv_frame(dv_paths),
-                    (F.col("__dwcs_rel") == F.col("__dwcs_dv_rel"))
-                    & (F.col("__dwcs_pos") == F.col("__dwcs_dv_pos")),
-                    "left_anti",
-                )
-                .drop("__dwcs_rel")
-            )
-        return df
+        return self._apply_dv(df, candidates)
 
     def _uri_to_rel(self, uri: str) -> str:
         """Driver-side map of a ``_metadata.file_path`` URI to the
         table-relative path (per-file DV accounting and the declarative
         reader's join key; the JVM read path derives the same key
-        executor-side via :meth:`_canonical_path_col`). A file OUTSIDE
+        executor-side via :meth:`_canonicalize_uri`). A file OUTSIDE
         the root is a shallow-cloned
         reference (see :meth:`clone_to`) — its manifest key is the
         absolute path, so that is what comes back. Relativized against
@@ -5278,22 +5359,6 @@ class ManagedTable:
         return out
 
     def update(self, where: list[tuple], set_exprs: dict) -> int:
-        """See :meth:`_update_impl`. The identity contract (round-13):
-        assigning a GENERATED ALWAYS AS IDENTITY column is rejected
-        (Delta semantics — the engine owns those values), checked
-        against the head record the update plans against, so past the
-        planning gate no snapshot is built; and an UPDATE that assigns a
-        BY DEFAULT identity column syncs the watermark past the data max
-        afterwards, once the commit lock is released, so a raised id can
-        never collide with a later allocation."""
-        n, touched = self._update_impl(where, set_exprs)
-        if n and touched:
-            self.sync_identity()
-        return n
-
-    def _update_impl(
-        self, where: list[tuple], set_exprs: dict
-    ) -> "tuple[int, list[str]]":
         """Row-level predicate UPDATE as ONE atomic commit (Delta's
         ``UPDATE SET ... WHERE``): rows where the ``where`` conjunction is
         TRUE get each ``set_exprs`` column replaced (value may be a
@@ -5308,7 +5373,17 @@ class ManagedTable:
         UPDATE never evolves the schema (that is
         ``append(merge_schema=True)``'s job) — and values are cast to the
         column's current type so a same-named type drift cannot poison
-        the table. Returns ``(rows updated, identity columns assigned)``."""
+        the table. Returns rows updated.
+
+        The identity contract (round-13): assigning a GENERATED ALWAYS
+        AS IDENTITY column is rejected (Delta semantics — the engine owns
+        those values), checked against the head record the update plans
+        against, so past the planning gate no snapshot is built; and an
+        UPDATE that assigns a BY DEFAULT identity column syncs the
+        watermark past the maxima its rewritten files' footers carry, so
+        a raised id can never collide with a later allocation. Only the
+        rewritten rows changed, so their files bound every new value;
+        no snapshot and no scan."""
         if not where:
             raise ValueError("update() requires at least one predicate")
         if not set_exprs:
@@ -5348,7 +5423,7 @@ class ManagedTable:
             head, candidates = self._where_candidates(head, where)
             if not candidates:
                 self._commit_dml(head, candidates, (None, {}), (), "update_noop")
-                return 0, touched
+                return 0
             hit_rows = self._scan_with_pos(head, candidates).filter(
                 _where_predicate(where)
             )
@@ -5369,7 +5444,7 @@ class ManagedTable:
                     dv = self._write_dv(staged)
                 if dv[0] is None:
                     self._commit_dml(head, candidates, dv, (), "update_noop")
-                    return 0, touched
+                    return 0
                 # Every staged row matched, so assignments apply
                 # unconditionally; one select keeps SQL UPDATE's
                 # read-the-original-row semantics.
@@ -5394,7 +5469,12 @@ class ManagedTable:
                     head, candidates, dv, new_files, "update",
                     read_spans=_where_read_spans(where, head.columns),
                 )
-                return sum(dv[1].values()), touched
+                if touched:
+                    self._advance_identity_past_files(
+                        {c: specs[c] for c in touched},
+                        new_files, head.columns,
+                    )
+                return sum(dv[1].values())
             finally:
                 shutil.rmtree(stage, ignore_errors=True)
 
@@ -5497,8 +5577,9 @@ class ManagedTable:
                         )
                     # An empty source (no keys, no new rows) still
                     # commits + completes (TableUpdateService.cs:167-172)
+                    new_files = written.result()
                     self._commit_dml(
-                        head, candidates, dv, written.result(),
+                        head, candidates, dv, new_files,
                         "merge" if n_keys else "merge_noop",
                         schema_json=(
                             None
@@ -5508,21 +5589,11 @@ class ManagedTable:
                     )
             finally:
                 keys.unpersist()
-        self._sync_identity_past_source(specs, source_df)
+            # the source's provided ids are exactly the new files' values
+            self._advance_identity_past_files(
+                specs, new_files, head.columns
+            )
         return n_keys
-
-    def _sync_identity_past_source(self, specs: dict, source_df) -> None:
-        """Post-merge watermark sync for BY DEFAULT identity columns the
-        source provided: one column-pruned aggregate over the SOURCE
-        (never the table)."""
-        if not specs:
-            return
-        phys = _phys_map(self.snapshot().columns) or {}
-        for col, spec in specs.items():
-            row = source_df.agg(F.max(col)).first()
-            mx = row[0] if row is not None else None
-            if mx is not None:
-                self._identity_sync_to(phys.get(col, col), spec, int(mx))
 
     def _bounded_span_candidates(
         self, head: _TableHead, keys: DataFrame, key_name: str
@@ -5776,8 +5847,9 @@ class ManagedTable:
                 matched_clauses + by_source_clauses, known, key_cols
             )
             _validate_insert_clauses(insert_clauses, known, src_cols, cols)
+            id_specs = _identity_specs(head.schema_json)
             id_sync_cols = _merge_identity_gate(
-                _identity_specs(head.schema_json), insert_clauses,
+                id_specs, insert_clauses,
                 matched_clauses + by_source_clauses,
             )
             keys = None
@@ -5824,7 +5896,8 @@ class ManagedTable:
                 # BY DEFAULT identity: the watermark must outrun every
                 # provided id so later ALLOCATIONS never collide
                 self._advance_identity_past_files(
-                    id_sync_cols, written, head.columns
+                    {c: id_specs[c] for c in id_sync_cols},
+                    written, head.columns,
                 )
         return {
             "updated": n_updated,
@@ -8061,8 +8134,38 @@ def _nullable(schema: T.StructType) -> T.StructType:
     )
 
 
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes are on by
+    default, so ``\\`` and ``'`` are escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _canonical_key(uri: str, prefix: str) -> "str | None":
+    """Driver-side twin of :meth:`ManagedTable._canonicalize_uri` for the
+    root prefix ``prefix`` (absolute, ``/``-terminated): the same
+    canonical path key Spark's expression yields for ``uri``. ``url_decode``
+    is Java's form decoding (``+`` is a space, ``%XX`` runs are UTF-8
+    bytes); where Spark would raise on a malformed escape, or decode
+    invalid UTF-8 to replacement characters, this returns ``None`` so
+    the caller leaves the string to Spark."""
+    from urllib.parse import unquote_plus
+
+    if "%" in uri:
+        if re.search(r"%(?![0-9A-Fa-f]{2})", uri):
+            return None
+        try:
+            uri = unquote_plus(uri, errors="strict")
+        except UnicodeDecodeError:
+            return None
+    if uri.startswith("file:"):
+        uri = uri[5:]
+    return uri[len(prefix):] if uri.startswith(prefix) else uri
+
+
 def _local_frame(
-    spark: SparkSession, rows: list, schema: "T.StructType | str"
+    spark: SparkSession,
+    rows: "list | pa.Table",
+    schema: "T.StructType | str",
 ) -> DataFrame:
     """A driver-built frame of ``rows`` with exactly ``schema`` (a
     ``StructType`` or DDL string; nullability included), planned as a JVM
@@ -8070,12 +8173,13 @@ def _local_frame(
     joins and unions over an empty one. ``createDataFrame(<list>,
     schema)`` builds a Python RDD instead, and its first action starts a
     Python-worker job (0.2-0.3 s on 4 local cores for one row, 0.8 s
-    cold). The rows cross to the JVM as one Arrow table; each row goes
-    through ``schema.toInternal`` first, so values read as the list path
-    reads them (a naive datetime is local time)."""
+    cold). The rows cross to the JVM as one Arrow table. ``rows`` is
+    either that table, columns in ``schema``'s order, or a list whose
+    every row goes through ``schema.toInternal`` first, so values read
+    as the list path reads them (a naive datetime is local time)."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    if not rows:
+    if not len(rows):
         js = spark._jsparkSession
         return DataFrame(
             js.createDataFrame(
@@ -8084,18 +8188,17 @@ def _local_frame(
             ),
             spark,
         )
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(rows, list):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-    arrow = to_arrow_schema(schema)
-    columns = zip(*(schema.toInternal(r) for r in rows))
-    return spark.createDataFrame(
-        pa.Table.from_arrays(
+        arrow = to_arrow_schema(schema)
+        columns = zip(*(schema.toInternal(r) for r in rows))
+        rows = pa.Table.from_arrays(
             [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
             schema=arrow,
-        ),
-        schema,
-    )
+        )
+    return spark.createDataFrame(rows, schema)
 
 
 def _project_rename(df: DataFrame, renames: dict | None) -> DataFrame:

@@ -1,15 +1,19 @@
-"""Per-Spark-job trace for one registry query (round-14 optimization).
+"""Per-Spark-job trace for registry queries.
 
 Runs the query once warm, then again with the UI's REST API scraped after,
 printing every job (name = JVM callsite, duration ms) plus inter-job gaps —
 the fixed per-action round-trips that dominate sf0.1 latency and the
 pass-count that dominates at 100 TB.
 
-Usage: python scripts/trace_jobs_r14.py <query> [<query> ...]
+Usage: python scripts/trace_jobs.py --round N <query> [<query> ...]
+
+``--round`` labels the Spark application (``dwcs-trace-r<N>``) with the
+optimization round the trace belongs to.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -33,10 +37,15 @@ def api(base: str, path: str):
 
 
 def main() -> None:
-    names = sys.argv[1:]
+    p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    p.add_argument("--round", type=int, required=True)
+    p.add_argument("queries", nargs="+")
+    opts = p.parse_args()
+    names = opts.queries
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(
-        app_name="dwcs-trace-r14", extra_conf={"spark.ui.enabled": "true"}
+        app_name=f"dwcs-trace-r{opts.round}",
+        extra_conf={"spark.ui.enabled": "true"},
     )
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId

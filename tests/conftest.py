@@ -19,6 +19,28 @@ def spark():
     s.stop()
 
 
+@pytest.fixture()
+def dv_scan_side(spark):
+    """A context manager that forces ``ManagedTable``'s deletion-vector
+    side onto the Spark scan for the block it wraps: with the session's
+    broadcast threshold at -1 no DV set is small enough for the local
+    relation. The threshold is restored on exit."""
+    from contextlib import contextmanager
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextmanager
+    def scan():
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return scan
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

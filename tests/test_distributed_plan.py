@@ -679,6 +679,59 @@ def test_dml_past_gate_takes_identity_specs_from_head(
     assert ti._head_version() == version
 
 
+def test_dml_identity_sync_reads_no_snapshot(spark, tmp_path, monkeypatch):
+    """Past the gate, a DML that writes BY DEFAULT identity values
+    advances the watermark from the footer stats of the files it wrote,
+    with the specs from the head record: an UPDATE assigning the
+    column, merge_by_key and merge build no snapshot, and a later
+    allocation still clears every written id."""
+    t = ManagedTable.create(spark, tmp_path / "t")
+    t.append(spark.createDataFrame([], "id bigint, k bigint, v bigint"))
+    t.set_identity("id", always=False)
+    for i in range(2):
+        t.append(
+            spark.range(i * 50, i * 50 + 50).selectExpr("id AS k", "0 AS v")
+        )
+    t._write_checkpoint(t.snapshot())
+    monkeypatch.setattr(mt, "_DISTRIBUTED_PLAN_MIN_FILES", 1)
+    calls = []
+    snapshot = ManagedTable.snapshot
+
+    def spy(self, *args, **kwargs):
+        calls.append(self.root)
+        return snapshot(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManagedTable, "snapshot", spy)
+    ops = {
+        "update": lambda: t.update([("k", "=", 3)], {"id": 5000}),
+        "merge_by_key": lambda: t.merge_by_key(
+            spark.createDataFrame(
+                [(6000, 4, 1), (6001, 200, 1)], "id bigint, k bigint, v bigint"
+            ),
+            "k",
+        ),
+        "merge": lambda: t.merge(
+            spark.createDataFrame(
+                [(7000, 5, 2), (7001, 201, 2)], "id bigint, k bigint, v bigint"
+            ),
+            "k",
+            when_matched_update={"id": "s.id", "v": "s.v"},
+        ),
+    }
+    counts = {}
+    for name, op in ops.items():
+        calls.clear()
+        op()
+        counts[name] = len(calls)
+    assert counts == {"update": 0, "merge_by_key": 0, "merge": 0}
+    monkeypatch.setattr(ManagedTable, "snapshot", snapshot)
+    t.append(spark.createDataFrame([(300, 0)], "k bigint, v bigint"))
+    ids = {r.k: r.id for r in t.read().collect()}
+    assert ids[3] == 5000 and ids[4] == 6000 and ids[5] == 7000
+    assert ids[300] > 7001
+    assert len(set(ids.values())) == len(ids) == 103
+
+
 class TestBoundedIngestCommit:
     """Round-7 item 1: the INGEST commits (append/overwrite/replace_where/
     merge) ride the bounded action-diff path past the gate — the last

@@ -194,24 +194,37 @@ def test_table_native_read_equals_declarative_reader(spark, evolved):
         c.table(spark, "db.t", versionAsOf=99)
 
 
-def test_table_plain_read_is_a_native_scan_of_live_files(spark, evolved):
+def test_table_plain_read_is_a_native_scan_of_live_files(
+    spark, evolved, dv_scan_side
+):
+    """A plain catalog read is a native parquet scan of the live data
+    files. Its small DV set joins as a local relation, so no DV parquet
+    is a Spark input; with the broadcast threshold off the DV side is
+    a scan of the DV parquets instead."""
     c, t, root = evolved
-    df = c.table(spark, "db.t")
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchScan managed_table" not in plan
     ds = _ds(spark, root)
     ds.collect()
     assert "BatchScan managed_table" in ds._jdf.queryExecution().executedPlan().toString()
     files = t.snapshot().files
-    read = {f.removeprefix("file://") for f in df.inputFiles()}
+    live = {str(Path(root) / f.path) for f in files}
+    dvs = {str(Path(root) / d) for f in files for d in f.dv_paths}
+
+    def plan_and_inputs():
+        df = c.table(spark, "db.t")
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BatchScan managed_table" not in plan
+        return plan, {f.removeprefix("file://") for f in df.inputFiles()}
+
+    plan, read = plan_and_inputs()
+    assert read == live
+    assert "LocalTableScan [__dwcs_dv_rel" in plan
+    with dv_scan_side():
+        plan, read = plan_and_inputs()
+    assert "LocalTableScan" not in plan
     # the live data files, plus the DV parquets the anti-join reads
-    assert {p for p in read if "/_dv/" not in p} == {
-        str(Path(root) / f.path) for f in files
-    }
-    assert {p for p in read if "/_dv/" in p} == {
-        str(Path(root) / d) for f in files for d in f.dv_paths
-    }
+    assert {p for p in read if "/_dv/" not in p} == live
+    assert {p for p in read if "/_dv/" in p} == dvs
 
 
 def test_table_log_options_still_use_declarative_reader(spark, evolved):
